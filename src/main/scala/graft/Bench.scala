@@ -60,10 +60,9 @@ object Bench {
     val windowBuffer = sys.env.getOrElse("SPARK_GRAFT_WINDOW_BUFFER", "1048576")
     // collect_list is a TypedImperativeAggregate: ObjectHashAggregateExec
     // silently falls back to SORT-based aggregation after this many hash-map
-    // keys per task (Spark default 128 — always exceeded by a re-group over
-    // >128 docs/partition, turning the "no sort" regroup route into the very
-    // sort it replaces). Sized so final-stage maps stay hash-based at bench
-    // scale; memory per task is the partition payload either way.
+    // keys per task (Spark default 128). Sized so final-stage maps stay
+    // hash-based at bench scale; memory per task is the partition payload
+    // either way.
     val objHashFallback = sys.env.getOrElse("SPARK_GRAFT_OBJ_HASH_FALLBACK", "4194304")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -217,25 +216,17 @@ object Bench {
     val gTpts = if (grpTask > 0) tokens / grpTask else 0.0
 
     // --- regroup flagship: ungrouped grid → ONE exchange → per-doc kernel ---
-    // SPARK_GRAFT_REGROUP_IMPL: "sort" (default — groupBy.as.mapGroups,
-    // key-only sort, conf-independent, the faster/stabler route measured
-    // in BENCH.md §regroup) or "agg" (collect_list hash aggregate — 37%
-    // fewer shuffle bytes via map-side list packing, wants the raised
-    // fallback threshold above). SPARK_GRAFT_REGROUP_NPARTS: explicit
-    // exchange partition count ("aqe" = let AQE decide); default = the
-    // session's shuffle partitions, pinning ~4 waves/core so AQE's 64 MB
-    // coalesce target cannot collapse the exchange to one straggler-bound
-    // wave.
+    // SPARK_GRAFT_REGROUP_NPARTS: explicit exchange partition count
+    // ("aqe" = let AQE decide); default = the session's shuffle partitions,
+    // pinning ~4 waves/core so AQE's 64 MB coalesce target cannot collapse
+    // the exchange to one straggler-bound wave.
     val (regroupSec, rgLegs, rShufWrite) = if (paths("regroup")) {
       val rgParts = sys.env.getOrElse("SPARK_GRAFT_REGROUP_NPARTS", shufflePartitions) match {
         case "aqe" => None
         case n => Some(n.toInt)
       }
       val regroupOut = graft.pipeline.FlagshipJob.regroupConsumeAll(
-        spark.read.parquet(corpusPath),
-        preShuffleCompact = sys.env.get("SPARK_GRAFT_PRESHUFFLE").contains("1"),
-        sortImpl = !sys.env.get("SPARK_GRAFT_REGROUP_IMPL").contains("agg"),
-        numPartitions = rgParts)
+        spark.read.parquet(corpusPath), numPartitions = rgParts)
       val writeRg = () => regroupOut.write.mode("overwrite").format("noop").save()
       leg(writeRg) // warmup
       shufWrite.set(0L)

@@ -157,38 +157,26 @@ object Explain {
     println("=== grouped token kernel (must be shuffle-free) ===")
     check("grouped: zero exchanges")(!groupedPlan.contains("Exchange"))
 
-    // --- regroup route (ungrouped general path): exactly ONE exchange,
-    // NO sort, NO window — the collect_list re-group replaces the window
-    // chain's giant sort + 8-frame evaluation (VERDICT r4 #1) ---
-    val regroup = graft.pipeline.FlagshipJob.regroupConsumeAll(corpus.toDF(), sortImpl = false)
-    val regroupPlan = regroup.queryExecution.executedPlan.toString
-    println("=== regroup route (one exchange, no sort, no window) ===")
-    check("regroup: exactly one hash exchange")(
-      "Exchange hashpartitioning".r.findAllIn(regroupPlan).length == 1)
-    check("regroup: no sort")(!regroupPlan.contains("Sort "))
-    check("regroup: no window operator")(!regroupPlan.contains("Window"))
-
-    // --- sort-grouped regroup route (round-5 bench default): one PINNED
-    // exchange (REPARTITION_BY_NUM — AQE cannot coalesce it to a single
-    // straggler-bound wave), reused by the group (no second exchange),
-    // key-only sort, no aggregate hash map (no objectHashAggregate
-    // fallback sensitivity), no window
-    val regroupSorted = graft.pipeline.FlagshipJob.regroupConsumeAll(
-      corpus.toDF(), sortImpl = true, numPartitions = Some(32))
-    val rsPlan = regroupSorted.queryExecution.executedPlan.toString
-    println("=== sort-grouped regroup route (one pinned exchange, key-only sort) ===")
-    check("regroup-sorted: exactly one hash exchange (repartition reused by group)")(
+    // --- regroup route (ungrouped general path): each doc's contiguous run
+    // packed into one row before ONE pinned exchange (REPARTITION_BY_NUM —
+    // AQE cannot coalesce it to a single straggler-bound wave), reused by
+    // the group (no second exchange), key-only sort, no aggregate hash map,
+    // no window (the window chain's multi-column sort + 8-frame evaluation
+    // is what this route replaces; VERDICT r4 #1)
+    val regroup = graft.pipeline.FlagshipJob.regroupConsumeAll(corpus.toDF(), numPartitions = Some(32))
+    val rsPlan = regroup.queryExecution.executedPlan.toString
+    println("=== regroup route (one pinned exchange, key-only sort) ===")
+    check("regroup: exactly one hash exchange (repartition reused by group)")(
       "Exchange hashpartitioning".r.findAllIn(rsPlan).length == 1)
-    check("regroup-sorted: no aggregate operator")(
+    check("regroup: no aggregate operator")(
       !rsPlan.contains("ObjectHashAggregate") && !rsPlan.contains("SortAggregate") &&
         !rsPlan.contains("HashAggregate"))
-    check("regroup-sorted: one key-only sort")({
+    check("regroup: one key-only sort")({
       val sorts = "Sort \\[([^\\]]*)\\]".r.findAllMatchIn(rsPlan).map(_.group(1)).toList
       sorts.length == 1 && sorts.head.contains("doc_id") && !sorts.head.contains(",")
     })
-    check("regroup-sorted: no window operator")(!rsPlan.contains("Window"))
-    check("regroup-sorted: pinned partition count survives AQE")(
-      regroupSorted.rdd.getNumPartitions == 32)
+    check("regroup: no window operator")(!rsPlan.contains("Window"))
+    check("regroup: pinned partition count survives AQE")(regroup.rdd.getNumPartitions == 32)
 
     // --- kinematic stats: NO percentile ImperativeAggregate (it buffers
     // every group value in executor memory — the 100-TB OOM the two-pass

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.slf4j.LoggerFactory
 
 /** Session-level engine tuning applied at query-construction time (the
   * harness mains build their own sessions and are frozen, so engine policy
@@ -26,13 +27,24 @@ import org.apache.spark.sql.SparkSession
   * intermediate is consumed through joins/aggregates that re-establish
   * their own distribution).
   *
-  * `SPARK_GRAFT_AQE_CACHED=false` restores the stock default. */
+  * `SPARK_GRAFT_AQE_CACHED=false` (any case) restores the stock default;
+  * an unparseable value is ignored with a warning. A host session that set
+  * the key explicitly keeps its value. */
 object Tuning {
 
-  private val Key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+  private val log = LoggerFactory.getLogger(getClass)
 
-  def ensureAdaptiveCachedPlans(spark: SparkSession): Unit = {
-    val want = sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "true")
-    if (!spark.conf.getOption(Key).contains(want)) spark.conf.set(Key, want)
-  }
+  private[graft] val Key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+  def ensureAdaptiveCachedPlans(spark: SparkSession): Unit =
+    if (!spark.conf.getAll.contains(Key))
+      spark.conf.set(Key, adaptiveCachedFlag(sys.env.get("SPARK_GRAFT_AQE_CACHED")).toString)
+
+  /** The engine's value for [[Key]]: the env override parsed as a boolean
+    * ignoring case, else true. */
+  private[graft] def adaptiveCachedFlag(env: Option[String]): Boolean =
+    env.fold(true)(v => v.trim.toBooleanOption.getOrElse {
+      log.warn(s"SPARK_GRAFT_AQE_CACHED='$v' is not true/false; ignored, $Key stays true")
+      true
+    })
 }

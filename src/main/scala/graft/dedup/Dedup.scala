@@ -115,8 +115,11 @@ object Dedup {
     // read — one upstream map task ⇒ the whole pair blow-up runs serially
     // again. The hint keeps the exchange-honoring merge join, which is the
     // only feasible strategy at corpus scale anyway: an inverted index
-    // never fits a broadcast.)
-    val nParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // never fits a broadcast.) A non-numeric conf (Databricks' `auto`)
+    // falls back to the default parallelism.
+    val spark = df.sparkSession
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toIntOption
+      .getOrElse(spark.sparkContext.defaultParallelism)
     val invP = inv.repartition(nParts, col("sh"))
     val a = invP.select(col("_id").as("id_a"), col("sh"))
     val b = invP.select(col("_id").as("id_b"), col("sh"))

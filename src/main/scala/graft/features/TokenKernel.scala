@@ -1,9 +1,8 @@
 package graft.features
 
-import graft.core.TokenAdapter
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.functions.{col, collect_list, lit, shiftleft}
+import org.apache.spark.sql.functions.{col, lit, shiftleft}
 
 /** Shuffle-free kinematic+session feature kernel for PRE-GROUPED sequences.
   *
@@ -74,36 +73,33 @@ object TokenKernel {
       session_id: Long
   )
 
-  private val SparkHashSeed = 42L
   private val EarthR = graft.kernels.Geo.EarthRadiusMeters
 
-  /** Spark's `xxhash64(lit(seed), token, pos)` for int columns: left fold of
-    * XXH64.hashInt starting at seed 42 (catalyst XxHash64 semantics). */
-  @inline private def hash3(seedLit: Int, token: Int, pos: Int): Long = {
-    var h = XXH64.hashInt(seedLit, SparkHashSeed)
-    h = XXH64.hashInt(token, h)
-    XXH64.hashInt(pos, h)
-  }
+  /** First fold step of Spark's `xxhash64(lit(seed), token, pos)` for the
+    * lat (seed 1) and lon (seed 2) literals: XXH64.hashInt(seed, 42). */
+  private val LatSeedHash = XXH64.hashInt(1, 42L)
+  private val LonSeedHash = XXH64.hashInt(2, 42L)
 
-  /** TokenAdapter.hashFrac mirror: hash → double in [0, 1). */
-  @inline private def hashFrac(seedLit: Int, token: Int, pos: Int): Double =
-    hash3(seedLit, token, pos).toDouble / 1.8446744073709552e19 + 0.5
+  /** TokenAdapter.hashFrac mirror: the rest of the left fold of
+    * XXH64.hashInt (catalyst XxHash64 semantics) → double in [0, 1). */
+  @inline private def hashFrac(seedHash: Long, token: Int, pos: Int): Double =
+    XXH64.hashInt(pos, XXH64.hashInt(token, seedHash)).toDouble / 1.8446744073709552e19 + 0.5
 
-  /** Geo.haversine mirror (same op order; java.lang.Math == codegen). */
-  @inline private def haversine(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val sdLat = math.sin((math.toRadians(lat2) - math.toRadians(lat1)) / 2.0)
-    val sdLon = math.sin((math.toRadians(lon2) - math.toRadians(lon1)) / 2.0)
-    val a = sdLat * sdLat + math.cos(p1) * math.cos(p2) * sdLon * sdLon
+  /** Geo.haversine mirror over each point's cached radians and cosine
+    * (same op order; java.lang.Math == codegen). */
+  @inline private def haversine(p1: Double, l1: Double, c1: Double, p2: Double, l2: Double, c2: Double): Double = {
+    val sdLat = math.sin((p2 - p1) / 2.0)
+    val sdLon = math.sin((l2 - l1) / 2.0)
+    val a = sdLat * sdLat + c1 * c2 * sdLon * sdLon
     2.0 * math.atan2(math.sqrt(a), math.sqrt(1.0 - a)) * EarthR
   }
 
-  /** Geo.bearing mirror (pmod(x, 360) = Spark Pmod double semantics). */
-  @inline private def bearing(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double = {
-    val p1 = math.toRadians(lat1); val p2 = math.toRadians(lat2)
-    val dLon = math.toRadians(lon2) - math.toRadians(lon1)
-    val y = math.cos(p2) * math.sin(dLon)
-    val x = math.cos(p1) * math.sin(p2) - math.sin(p1) * math.cos(p2) * math.cos(dLon)
+  /** Geo.bearing mirror over cached radians, cosines and sines (pmod(x, 360)
+    * = Spark Pmod double semantics). */
+  @inline private def bearing(l1: Double, c1: Double, s1: Double, l2: Double, c2: Double, s2: Double): Double = {
+    val dLon = l2 - l1
+    val y = c2 * math.sin(dLon)
+    val x = c1 * s2 - s1 * c2 * math.cos(dLon)
     val deg = math.toDegrees(math.atan2(y, x))
     val r = deg % 360.0
     if (r < 0) r + 360.0 else r
@@ -146,8 +142,10 @@ object TokenKernel {
     def run(docId: String, tokens: Array[Int], positions: Array[Int], emit: TokenRow => Unit): DocVector = {
       val n = tokens.length
       val sDist, sDistStart, sSpeed, sAcc, sJerk, sBrg, sBrate, sRobr = new SumAcc
-      var pLat, pLon = 0.0
-      var lat0, lon0 = 0.0
+      // radians, cosine and sine of the previous and the first point: each
+      // point's trig is computed once (bit-identical to recomputing it)
+      var pRLat, pRLon, pCos, pSin = 0.0
+      var rLat0, rLon0, cos0 = 0.0
       var pSpeed, pAcc, pBrg, pBrate = 0.0
       // definedness is tracked SEPARATELY from the value: a feature can be
       // a defined genuine NaN (window path: non-null NaN) or undefined
@@ -158,9 +156,11 @@ object TokenKernel {
       while (i < n) {
         val tok = tokens(i)
         val pos = if (positions eq null) i else positions(i)
-        val lat = -90.0 + hashFrac(1, tok, pos) * 180.0
-        val lon = -180.0 + hashFrac(2, tok, pos) * 360.0
-        if (i == 0) { lat0 = lat; lon0 = lon }
+        val lat = -90.0 + hashFrac(LatSeedHash, tok, pos) * 180.0
+        val lon = -180.0 + hashFrac(LonSeedHash, tok, pos) * 360.0
+        val rLat = math.toRadians(lat); val rLon = math.toRadians(lon)
+        val cosLat = math.cos(rLat); val sinLat = math.sin(rLat)
+        if (i == 0) { rLat0 = rLat; rLon0 = rLon; cos0 = cosLat }
         var dist, distStart, speed, accel, jerk, brg, brate, robr = 0.0
         var dDist, dSpeed, dAcc, dJerk, dBrg, dBrate, dRobr = false
         if (i > 0) {
@@ -170,9 +170,9 @@ object TokenKernel {
             if (positions eq null) dtMicros
             else (pos.toLong - positions(i - 1).toLong) * dtMicros
           val dt = dtMic.toDouble / 1e6
-          dist = haversine(pLat, pLon, lat, lon); dDist = true
-          distStart = haversine(lat0, lon0, lat, lon)
-          brg = bearing(pLat, pLon, lat, lon); dBrg = true
+          dist = haversine(pRLat, pRLon, pCos, rLat, rLon, cosLat); dDist = true
+          distStart = haversine(rLat0, rLon0, cos0, rLat, rLon, cosLat)
+          brg = bearing(pRLon, pCos, pSin, rLon, cosLat, sinLat); dBrg = true
           // derivative defined iff BOTH the current and lagged upstream
           // values are defined (a null on either side nulls the window
           // expression) and the division didn't overflow (infToNull)
@@ -192,7 +192,7 @@ object TokenKernel {
             o(speed, dSpeed), o(accel, dAcc), o(jerk, dJerk), o(brg, dBrg),
             o(brate, dBrate), o(robr, dRobr), sessions))
         }
-        pLat = lat; pLon = lon
+        pRLat = rLat; pRLon = rLon; pCos = cosLat; pSin = sinLat
         pSpeed = speed; pSpeedDef = dSpeed
         pAcc = accel; pAccDef = dAcc
         pBrg = brg; pBrgDef = dBrg
@@ -217,34 +217,46 @@ object TokenKernel {
       .map(r => state.run(r, null))(Encoders.product[DocVector])
   }
 
-  /** Row shape of the packed re-group aggregate: one `(pos << 32) | token`
-    * long per observation (sorted lazily in the kernel). */
-  case class PackedSeqRow(doc_id: String, pt: Array[Long])
+  /** One exchanged row of the re-group route: a run of adjacent grid rows
+    * of one doc, each observation packed as `(pos << 32) | token` — the
+    * first in `pt`, the rest (null if none) in `more`. */
+  case class PackedRun(doc_id: String, pt: Long, more: Array[Long])
 
-  /** UNGROUPED-input fast path (VERDICT r4 #1): per-doc feature vectors
-    * over an exploded / evented grid `(doc_id, pos, token)` that is NOT
-    * pre-grouped — the general-path replacement for the exploded-grid
-    * 8-frame window chain.
+  /** The reduce side's view of a [[PackedRun]]: `doc_id` comes from the
+    * group key, so only these fields are decoded per row (by name). */
+  case class RunTail(pt: Long, more: Array[Long])
+
+  /** Longest run packed into one row: bounds a map task's buffer and the
+    * shuffled row size for whale docs (the reduce side concatenates). */
+  private val MaxRun = 1 << 20
+
+  /** UNGROUPED-input path (VERDICT r4 #1): per-doc feature vectors over an
+    * exploded / evented grid `(doc_id, pos, token)` that is NOT pre-grouped
+    * — the general-path replacement for the exploded-grid 8-frame window
+    * chain.
     *
     * Plan shape: project each row to ONE packed long
-    * `(pos << 32) | (token & 0xFFFFFFFF)` (codegen), hash-aggregate
-    * `collect_list` per doc — partial lists merge map-side, so the single
-    * exchange carries ~8 B/observation and NOTHING is ever sorted by the
-    * engine (no giant external sort, no window frames, no 28-B grid rows).
-    * Each task then sorts its docs' primitive long arrays
-    * (`java.util.Arrays.sort`, dual-pivot on longs — cache-resident for
-    * real doc lengths) and runs the same zero-copy per-doc loop as
-    * [[docVectors]]. Signed packing keeps order correct for negative
-    * positions; positions must be UNIQUE per doc (same contract as the
-    * window path's total order).
+    * `(pos << 32) | (token & 0xFFFFFFFF)` (codegen); a typed mapPartitions
+    * collapses each maximal run of adjacent rows sharing a doc_id into one
+    * [[PackedRun]] — it holds one run, no hash map, no sort — so a grid that
+    * arrives doc-contiguous (an explode, an ordered event log) ships and
+    * sorts ONE row per doc. Packing follows the run length the input
+    * actually has: a fully shuffled grid degrades to one row per
+    * observation. One exchange on doc_id, a key-only sort (8-byte prefix
+    * comparisons — not the window chain's multi-column sort), then
+    * `groupBy(col).as[...].flatMapGroups` concatenates a doc's runs, sorts
+    * its primitive long array (`java.util.Arrays.sort`; signed packing
+    * keeps (pos, token) order, negative positions included) and runs the
+    * same zero-copy per-doc loop as [[docVectors]]. Positions must be
+    * UNIQUE per doc (same contract as the window path's total order).
     *
-    * Scale: wall = scan + one token-compact shuffle + O(Σ n log n_doc)
-    * local work with O(doc) memory — the shuffle is the only global
-    * barrier, so efficiency tracks the exchange, not a sort/window stage
-    * (BENCH.md §regroup records the ≥0.8 N→4N sweep). Whale docs bound a
-    * single task at O(n_doc) memory — the same envelope as the window
-    * path's per-partition frame, without the sorter. */
-  def regroupDocVectors(
+    * Memory: a map task holds one run (at most [[MaxRun]] observations), a
+    * reduce task ONE doc's packed array — whale docs bound a task at
+    * O(n_doc), the same envelope as the window path's per-partition frame.
+    * No session conf is read. RegroupKernelSpec asserts bit-equality with
+    * the window path on contiguous, sparse, shuffled and partly clustered
+    * grids. */
+  def regroupDocVectorsSorted(
       grid: DataFrame,
       stepSec: Long = 1L,
       gapSeconds: Double = 1.5,
@@ -254,9 +266,8 @@ object TokenKernel {
       numPartitions: Option[Int] = None
   ): Dataset[DocVector] = {
     val state = new DocState(stepSec, gapSeconds)
-    regrouped(grid, docCol, posCol, tokenCol, numPartitions).map { r =>
-      val (positions, tokens) = unpack(r.pt)
-      state.run(r.doc_id, tokens, positions, null)
+    regroupRuns(grid, docCol, posCol, tokenCol, numPartitions) { (doc, positions, tokens) =>
+      Iterator.single(state.run(doc, tokens, positions, null))
     }(Encoders.product[DocVector])
   }
 
@@ -270,90 +281,75 @@ object TokenKernel {
       tokenCol: String = "token"
   ): Dataset[TokenRow] = {
     val state = new DocState(stepSec, gapSeconds)
-    regrouped(grid, docCol, posCol, tokenCol).flatMap { r =>
-      val (positions, tokens) = unpack(r.pt)
+    regroupRuns(grid, docCol, posCol, tokenCol, None) { (doc, positions, tokens) =>
       val buf = new scala.collection.mutable.ArrayBuffer[TokenRow](tokens.length)
-      state.run(r.doc_id, tokens, positions, buf += _)
-      buf
+      state.run(doc, tokens, positions, buf += _)
+      buf.iterator
     }(Encoders.product[TokenRow])
   }
 
-  /** One exchange: codegen'd pack → map-side-combined collect_list of
-    * primitive longs.
-    *
-    * CAVEAT (measured, BENCH.md §regroup): collect_list is a
-    * TypedImperativeAggregate, and ObjectHashAggregateExec falls back to
-    * SORT-based aggregation once a task's hash map passes
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` keys —
-    * Spark's default is 128, which any re-group over >128 docs/partition
-    * exceeds, silently re-introducing the giant sort this route exists to
-    * avoid (2–3× task-time on the bench corpus). Run it with the
-    * threshold sized to the expected docs/partition, or use
-    * [[regroupDocVectorsSorted]], which needs no session conf. */
-  private def regrouped(
+  /** pack → run-collapse → ONE exchange on doc_id → key-only sort → `f`
+    * over each doc's sorted (positions, tokens). With `numPartitions` set,
+    * an EXPLICIT hash repartition on doc_id rides after the packing — the
+    * group reuses the partitioning (still exactly one exchange), and the
+    * explicit count (REPARTITION_BY_NUM origin) is exempt from AQE
+    * partition coalescing. Measured (BENCH.md §regroup): AQE's 64 MB
+    * advisory target coalesced the ~1 GB unpacked regroup exchange to ~one
+    * task WAVE, serializing whale-doc stragglers — pinning ~4 waves/core
+    * restored 93% task-slot utilization. Leave None on real clusters
+    * unless the same one-wave pattern appears. */
+  private def regroupRuns[U: Encoder](
       grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
-      numPartitions: Option[Int] = None): Dataset[PackedSeqRow] = {
-    packedGrid(grid, docCol, posCol, tokenCol, numPartitions)
-      .groupBy(col("doc_id"))
-      .agg(collect_list(col("_pt")).as("pt"))
-      .as(Encoders.product[PackedSeqRow])
-  }
-
-  /** Projection to `(doc_id, packed long)`; with `numPartitions` set, an
-    * EXPLICIT hash repartition on doc_id rides here — the downstream
-    * groupBy/mapGroups reuses the partitioning (still exactly one
-    * exchange), and the explicit count (REPARTITION_BY_NUM origin) is
-    * exempt from AQE partition coalescing. Measured (BENCH.md §regroup):
-    * AQE's 64 MB advisory target coalesces the ~1 GB regroup exchange to
-    * ~one task WAVE, serializing whale-doc stragglers — pinning ~4
-    * waves/core restored 93% task-slot utilization. Leave None on real
-    * clusters unless the same one-wave pattern appears. */
-  private def packedGrid(
-      grid: DataFrame, docCol: String, posCol: String, tokenCol: String,
-      numPartitions: Option[Int] = None): DataFrame = {
+      numPartitions: Option[Int])(f: (String, Array[Int], Array[Int]) => Iterator[U]): Dataset[U] = {
     val packed = shiftleft(col(posCol).cast("long"), 32)
       .bitwiseOR(col(tokenCol).cast("long").bitwiseAND(lit(0xFFFFFFFFL)))
-    val projected = grid.select(col(docCol).cast("string").as("doc_id"), packed.as("_pt"))
-    numPartitions.map(n => projected.repartition(n, col("doc_id"))).getOrElse(projected)
+    val runs = grid.select(col(docCol).cast("string").as("doc_id"), packed.as("_pt"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .mapPartitions(packRuns)(Encoders.product[PackedRun])
+    numPartitions.map(n => runs.repartition(n, col("doc_id"))).getOrElse(runs)
+      .groupBy(col("doc_id"))
+      .as[String, RunTail](Encoders.STRING, Encoders.product[RunTail])
+      .flatMapGroups { (doc, it) =>
+        val (positions, tokens) = unpack(concat(it))
+        f(doc, positions, tokens)
+      }
   }
 
-  /** UNGROUPED-input fast path, sort-grouped formulation: exchange the
-    * packed rows on doc_id, sort each partition by the KEY ONLY (8-byte
-    * prefix comparisons — not the 8-frame window chain's multi-column
-    * sort), stream one doc at a time through the same zero-copy kernel
-    * via `groupBy(col).as[...].mapGroups`.
-    *
-    * vs [[regroupDocVectors]]: no aggregate hash map, so no
-    * `objectHashAggregate.sortBased.fallbackThreshold` sensitivity and no
-    * per-task map memory — peak memory is ONE doc's packed array (whale
-    * docs bound a task at O(n_doc), same envelope). The engine sort costs
-    * O(rows log rows) per partition but needs no session conf; the agg
-    * formulation is faster when its final map stays hash-based.
-    * RegroupKernelSpec asserts both routes bit-equal the window path. */
-  def regroupDocVectorsSorted(
-      grid: DataFrame,
-      stepSec: Long = 1L,
-      gapSeconds: Double = 1.5,
-      docCol: String = "doc_id",
-      posCol: String = "pos",
-      tokenCol: String = "token",
-      numPartitions: Option[Int] = None
-  ): Dataset[DocVector] = {
-    val state = new DocState(stepSec, gapSeconds)
-    packedGrid(grid, docCol, posCol, tokenCol, numPartitions)
-      .groupBy(col("doc_id"))
-      .as[String, (String, Long)](Encoders.STRING, Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .mapGroups { (doc, it) =>
-        var arr = new Array[Long](64)
-        var n = 0
-        while (it.hasNext) {
-          if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n << 1)
-          arr(n) = it.next()._2
+  /** Collapse each maximal run of adjacent rows sharing a doc into one
+    * [[PackedRun]] of at most [[MaxRun]] observations. */
+  private def packRuns(rows: Iterator[(String, Long)]): Iterator[PackedRun] = new Iterator[PackedRun] {
+    private var head = if (rows.hasNext) rows.next() else null
+    private var buf = new Array[Long](64)
+    def hasNext: Boolean = head ne null
+    def next(): PackedRun = {
+      val (doc, first) = head
+      head = null
+      var n = 0
+      while ((head eq null) && rows.hasNext) {
+        val r = rows.next()
+        if (n < MaxRun - 1 && r._1 == doc) {
+          if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n << 1)
+          buf(n) = r._2
           n += 1
-        }
-        val (positions, tokens) = unpack(java.util.Arrays.copyOf(arr, n))
-        state.run(doc, tokens, positions, null)
-      }(Encoders.product[DocVector])
+        } else head = r
+      }
+      PackedRun(doc, first, if (n == 0) null else java.util.Arrays.copyOf(buf, n))
+    }
+  }
+
+  /** A doc's runs, concatenated into one (unsorted) packed array. */
+  private def concat(runs: Iterator[RunTail]): Array[Long] = {
+    var arr = new Array[Long](64)
+    var n = 0
+    while (runs.hasNext) {
+      val r = runs.next()
+      val m = if (r.more eq null) 0 else r.more.length
+      if (n + 1 + m > arr.length) arr = java.util.Arrays.copyOf(arr, math.max(n + 1 + m, arr.length << 1))
+      arr(n) = r.pt
+      if (m > 0) System.arraycopy(r.more, 0, arr, n + 1, m)
+      n += 1 + m
+    }
+    if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n)
   }
 
   /** Sort the packed array (signed long order = (pos, token-unsigned)

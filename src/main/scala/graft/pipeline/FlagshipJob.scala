@@ -36,13 +36,14 @@ object FlagshipJob {
     * the one-exchange general-path route). FlagshipParitySpec asserts all
     * three produce the same rows in the same schema.
     *
-    * `preShuffleCompact` only affects the exchange-bearing impls (the
-    * default kernel plan has no exchange at all). */
+    * `preShuffleCompact` only affects the window impl (the default kernel
+    * plan has no exchange at all; the regroup route packs each doc's run
+    * before its one exchange). */
   def windowConsumeAll(corpus: DataFrame, preShuffleCompact: Boolean = true): DataFrame =
     sys.env.getOrElse("SPARK_GRAFT_FLAGSHIP_IMPL", "grouped") match {
       case "window" => windowReferenceConsumeAll(corpus, preShuffleCompact)
       case "regroup" =>
-        regroupConsumeAll(corpus, preShuffleCompact = preShuffleCompact)
+        regroupConsumeAll(corpus)
           .select(ConsumeAllColumns.map(col): _*)
       case _ =>
         graft.features.TokenKernel.docVectors(corpus, stepSec = 1L, gapSeconds = GapSeconds)
@@ -67,29 +68,16 @@ object FlagshipJob {
     graft.features.TokenKernel.docVectors(corpus, stepSec = 1L, gapSeconds = GapSeconds).toDF()
 
   /** Same result over the UNGROUPED grid through the re-group route
-    * (VERDICT r4 #1): explode (narrow) → one packed-long collect_list
-    * exchange → per-doc kernel. No sort, no window frames — the
-    * general-path replacement when the input is not pre-grouped.
-    * `preShuffleCompact` mirrors [[windowConsumeAll]]'s A/B knob: cluster
-    * the compact SEQUENCE rows first so the explode + re-group aggregate
-    * plan NO further exchange (GenerateExec preserves partitioning). */
-  def regroupConsumeAll(
-      corpus: DataFrame,
-      preShuffleCompact: Boolean = false,
-      // sort-grouped is the DEFAULT: conf-independent (no
-      // objectHashAggregate fallback-threshold sensitivity), measured
-      // faster and stabler (BENCH.md §Round 5); the collect_list agg
-      // route is the opt-in for network-constrained clusters (37% fewer
-      // shuffle bytes via map-side list packing)
-      sortImpl: Boolean = true,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val clustered = if (preShuffleCompact) corpus.repartition(col("doc_id")) else corpus
-    val (grid, _) = TokenAdapter.explodeTokens(clustered)
-    if (sortImpl)
-      graft.features.TokenKernel.regroupDocVectorsSorted(
-        grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
-    else
-      graft.features.TokenKernel.regroupDocVectors(
-        grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
+    * (VERDICT r4 #1): explode (narrow) → pack each doc's contiguous run of
+    * grid rows into one row → one exchange + key-only sort → per-doc
+    * kernel ([[graft.features.TokenKernel.regroupDocVectorsSorted]]). No
+    * window frames — the general-path replacement when the input is not
+    * pre-grouped. An explode emits each doc as one run, so one row per doc
+    * crosses the exchange: the byte saving that clustering the compact
+    * SEQUENCE rows first (`preShuffleCompact`) buys the window impl. */
+  def regroupConsumeAll(corpus: DataFrame, numPartitions: Option[Int] = None): DataFrame = {
+    val (grid, _) = TokenAdapter.explodeTokens(corpus)
+    graft.features.TokenKernel.regroupDocVectorsSorted(
+      grid, stepSec = 1L, gapSeconds = GapSeconds, numPartitions = numPartitions).toDF()
   }
 }

@@ -1,0 +1,58 @@
+package graft
+
+import graft.core.Tuning
+import graft.dedup.Dedup
+
+/** Engine code never crashes on a host session's configuration and never
+  * silently rewrites an explicit host setting. */
+class ConfHygieneSpec extends SparkSpec {
+
+  /** Run `body` and put `key` back the way it was, set or unset. */
+  private def restoring(key: String)(body: => Unit): Unit = {
+    val before = spark.conf.getAll.get(key)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("SPARK_GRAFT_AQE_CACHED parses case-insensitively; an unparseable value keeps the default") {
+    assert(Tuning.adaptiveCachedFlag(None))
+    assert(Tuning.adaptiveCachedFlag(Some("true")))
+    assert(!Tuning.adaptiveCachedFlag(Some("false")))
+    assert(!Tuning.adaptiveCachedFlag(Some("False")))
+    assert(!Tuning.adaptiveCachedFlag(Some(" FALSE ")))
+    assert(Tuning.adaptiveCachedFlag(Some("TRUE")))
+    // was passed verbatim to a boolean conf: IllegalArgumentException
+    assert(Tuning.adaptiveCachedFlag(Some("0")))
+    assert(Tuning.adaptiveCachedFlag(Some("flase")))
+  }
+
+  test("ensureAdaptiveCachedPlans sets its key only when the host has not") {
+    restoring(Tuning.Key) {
+      spark.conf.unset(Tuning.Key)
+      Tuning.ensureAdaptiveCachedPlans(spark)
+      assert(spark.conf.getAll.get(Tuning.Key).contains(
+        Tuning.adaptiveCachedFlag(sys.env.get("SPARK_GRAFT_AQE_CACHED")).toString))
+      // an explicit host setting survives, also through a table loader
+      import spark.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft_conf_").toString
+      Seq(1).toDF("event_id").write.parquet(s"$dir/events.parquet")
+      spark.conf.set(Tuning.Key, "false")
+      Tuning.ensureAdaptiveCachedPlans(spark)
+      SparkEntry.events(spark, dir)
+      assert(spark.conf.get(Tuning.Key) == "false")
+    }
+  }
+
+  test("non-numeric spark.sql.shuffle.partitions (Databricks `auto`) falls back to default parallelism") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val docs = Seq(("a", "the quick brown fox jumps"), ("b", "the quick brown fox leaps")).toDF("doc_id", "text")
+    var pairs: org.apache.spark.sql.DataFrame = null
+    restoring(key) {
+      org.apache.spark.sql.RawConf.put(spark, key, "auto")
+      // the builder used to throw NumberFormatException here
+      pairs = Dedup.ngramJaccardPairs(docs, k = 2, threshold = 0.1)
+    }
+    assert(pairs.count() == 1)
+  }
+}
