@@ -1,8 +1,6 @@
 package graft
 
-import graft.core.{SyntheticCorpus, TokenAdapter}
-import graft.features.Kinematic
-import graft.session.Sessionize
+import graft.core.SyntheticCorpus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,9 +9,10 @@ import org.apache.spark.sql.functions._
   * Headline metric (BASELINE.md): feature-vector THROUGHPUT in tokens/sec
   * for the full kinematic + session feature set over the tokenized-sequence
   * table (doc_id, tokens array<int32>, n_tok, source) — deterministic
-  * synthetic corpus, seed 42, heavy-tailed lengths. The scaling protocol
-  * (local[8] vs local[32] on identical input) is driven by
-  * SPARK_GRAFT_CPUS; tools/run_scaling.sh sweeps it and writes BENCH.md.
+  * synthetic corpus, seed 42, heavy-tailed lengths. Runs on the shared
+  * [[Driver.session]]; the scaling protocol (local[N] vs local[4N] on
+  * identical input) is driven by SPARK_GRAFT_CPUS; tools/run_scaling.sh
+  * sweeps it and writes BENCH.md.
   *
   * Prints ONE JSON line:
   *   {"metric":"total","value":<sec>,"unit":"sec","queries":{...},
@@ -21,23 +20,24 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
 
-  /** The flagship pipeline: scan → explode → fused 8-feature window →
-    * gap sessionize → consume EVERY feature (so column pruning cannot drop
-    * any of the work). One shuffle for the window chain + one for the agg. */
+  /** The flagship pipeline: scan → zero-shuffle per-doc kernel (8
+    * kinematic features + gap sessionize) → consume EVERY feature (so
+    * column pruning cannot drop any of the work). No exchange, no sort, no
+    * window ([[graft.pipeline.FlagshipJob.consumeAll]], the one definition
+    * Bench, Explain and RunPipeline share). */
   def flagship(spark: SparkSession, corpusPath: String): (Long, DataFrame) = {
     val corpus = spark.read.parquet(corpusPath)
-    // SPARK_GRAFT_PRESHUFFLE=0 disables the compact pre-shuffle for A/B
-    // measurement (see FlagshipJob — the one definition Bench/Explain/
-    // RunPipeline all share).
-    val out = graft.pipeline.FlagshipJob.windowConsumeAll(
-      corpus, preShuffleCompact = !sys.env.get("SPARK_GRAFT_PRESHUFFLE").contains("0"))
+    val out = graft.pipeline.FlagshipJob.consumeAll(corpus)
     val tokens = corpus.agg(sum(col("n_tok"))).first().getLong(0)
     (tokens, out)
   }
 
+  /** Corpus size when SPARK_GRAFT_BENCH_DOCS is unset. */
+  private[graft] val DefaultDocs = 200000L
+
   // 256 input splits ⇒ ≥8 task waves at 32 cores: stragglers from the
   // heavy-tailed doc lengths amortize instead of serializing the last wave.
-  private def ensureCorpus(spark: SparkSession, nDocs: Long): String = {
+  private[graft] def ensureCorpus(spark: SparkSession, nDocs: Long): String = {
     val path = s"${sys.props("java.io.tmpdir")}/graft_corpus_${nDocs}_p256"
     if (!new java.io.File(path, "_SUCCESS").exists()) {
       SyntheticCorpus.generate(spark, nDocs)
@@ -48,37 +48,13 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "200000").toLong
+    val sfDir = Driver.sfDir
+    val cpus = Driver.cores()
+    val nDocs = sys.env.get("SPARK_GRAFT_BENCH_DOCS").fold(DefaultDocs)(_.toLong)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Shuffle partitions: 4 waves per core keeps all cores busy through the
-    // window stage's uneven sort costs (a single wave stalls on stragglers).
-    // Window buffer threshold raised so per-entity groups stay in plain
-    // on-heap arrays instead of hitting the managed external sorter.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", (cpus.toInt * 4).toString)
-    val windowBuffer = sys.env.getOrElse("SPARK_GRAFT_WINDOW_BUFFER", "1048576")
-    // collect_list is a TypedImperativeAggregate: ObjectHashAggregateExec
-    // silently falls back to SORT-based aggregation after this many hash-map
-    // keys per task (Spark default 128). Sized so final-stage maps stay
-    // hash-based at bench scale; memory per task is the partition payload
-    // either way.
-    val objHashFallback = sys.env.getOrElse("SPARK_GRAFT_OBJ_HASH_FALLBACK", "4194304")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", objHashFallback)
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", windowBuffer)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing shrinks the regroup exchange to ~1 task wave
-      // (advisory 64 MB over ~1 GB of shuffle), serializing whale-doc
-      // stragglers — A/B'd in BENCH.md §regroup
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val windowBuffer = spark.conf.get("spark.sql.windowExec.buffer.in.memory.threshold")
 
     // --- per-operator queries on the driver-provided SF dir ---
     // (skipped in the scaling sweep: SPARK_GRAFT_FLAGSHIP_ONLY=1 measures
@@ -116,10 +92,11 @@ object Bench {
       }
 
     // --- flagship token-throughput (1 warmup + reps, median) ---
-    // SPARK_GRAFT_PATHS selects which physical paths to time: "window"
-    // (explode → shuffle → window chain), "grouped" (typed per-doc kernel,
-    // zero shuffle), and/or "regroup" (ungrouped grid → one collect_list
-    // exchange → per-doc kernel — the general-path replacement).
+    // SPARK_GRAFT_PATHS selects which legs to time: "window" (the
+    // flagship: FlagshipJob.consumeAll, the per-doc kernel in the
+    // consume-all schema), "grouped" (the bare typed per-doc kernel, zero
+    // shuffle), and/or "regroup" (ungrouped grid → run packing → one
+    // exchange → per-doc kernel — the general path).
     val paths = sys.env.getOrElse("SPARK_GRAFT_PATHS", "window,grouped,regroup")
       .split(",").map(_.trim).toSet
     val corpusPath = ensureCorpus(spark, nDocs)
@@ -130,7 +107,6 @@ object Bench {
     val shufRead = new java.util.concurrent.atomic.AtomicLong(0L)
     val taskRun = new java.util.concurrent.atomic.AtomicLong(0L) // executorRunTime ms
     val taskGc = new java.util.concurrent.atomic.AtomicLong(0L)  // jvmGCTime ms
-    val stageLog = sys.env.get("SPARK_GRAFT_STAGE_LOG").contains("1")
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -138,13 +114,6 @@ object Bench {
         shufRead.addAndGet(sc.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead)
         taskRun.addAndGet(sc.stageInfo.taskMetrics.executorRunTime)
         taskGc.addAndGet(sc.stageInfo.taskMetrics.jvmGCTime)
-        if (stageLog) {
-          val si = sc.stageInfo
-          val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
-          val cpu = si.taskMetrics.executorRunTime / 1e3
-          System.err.println(
-            f"[stage ${si.stageId}%3d] tasks=${si.numTasks}%4d wall=$wall%7.2fs taskTime=$cpu%8.2fs gc=${si.taskMetrics.jvmGCTime / 1e3}%6.2fs ${si.name.takeWhile(_ != '\n')}")
-        }
       }
     })
     // stage-completed events are delivered asynchronously; poll the
@@ -175,8 +144,8 @@ object Bench {
       val wall = (System.nanoTime() - t0) / 1e9
       drainListeners()
       (wall, (taskRun.get() - r0) / 1e3, (taskGc.get() - g0) / 1e3,
-        Controls.aluControl(cpus.toInt), Controls.membwControl(cpus.toInt),
-        Controls.chaseControl(cpus.toInt), Controls.diskControl())
+        Controls.aluControl(cpus), Controls.membwControl(cpus),
+        Controls.chaseControl(cpus), Controls.diskControl())
     }
     def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
     def jarr(xs: Seq[Double]): String = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
@@ -216,17 +185,12 @@ object Bench {
     val gTpts = if (grpTask > 0) tokens / grpTask else 0.0
 
     // --- regroup flagship: ungrouped grid → ONE exchange → per-doc kernel ---
-    // SPARK_GRAFT_REGROUP_NPARTS: explicit exchange partition count
-    // ("aqe" = let AQE decide); default = the session's shuffle partitions,
-    // pinning ~4 waves/core so AQE's 64 MB coalesce target cannot collapse
-    // the exchange to one straggler-bound wave.
+    // The exchange is pinned at the session's shuffle partitions (~4
+    // waves/core) so AQE's 64 MB coalesce target cannot collapse it to one
+    // straggler-bound wave.
     val (regroupSec, rgLegs, rShufWrite) = if (paths("regroup")) {
-      val rgParts = sys.env.getOrElse("SPARK_GRAFT_REGROUP_NPARTS", shufflePartitions) match {
-        case "aqe" => None
-        case n => Some(n.toInt)
-      }
       val regroupOut = graft.pipeline.FlagshipJob.regroupConsumeAll(
-        spark.read.parquet(corpusPath), numPartitions = rgParts)
+        spark.read.parquet(corpusPath), numPartitions = Some(shufflePartitions))
       val writeRg = () => regroupOut.write.mode("overwrite").format("noop").save()
       leg(writeRg) // warmup
       shufWrite.set(0L)

@@ -1,0 +1,55 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The driver session policy, defined once: `Bench`, `QTime`, `PlanDump`,
+  * `Verify` and `RunPipeline` all plan and run on [[session]]. (`Explain`
+  * and the test session keep their pinned `local[4]` sessions: they are
+  * plan gates.)
+  *
+  * Defaults come from the host: `SPARK_GRAFT_CPUS` sets the local cores,
+  * else every core the JVM sees. */
+object Driver {
+
+  /** Window buffer threshold, raised so per-entity groups stay in plain
+    * on-heap arrays instead of hitting the managed external sorter. */
+  private val WindowBuffer = 1048576
+
+  /** collect_list is a TypedImperativeAggregate: ObjectHashAggregateExec
+    * silently falls back to SORT-based aggregation after this many hash-map
+    * keys per task (Spark default 128). Sized so final-stage maps stay
+    * hash-based at bench scale; memory per task is the partition payload
+    * either way. */
+  private val ObjHashFallback = 4194304
+
+  /** The dataset directory the mains read when none is given. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Local cores: `SPARK_GRAFT_CPUS` from `env`, else
+    * `Runtime.availableProcessors`. A value that is not a positive integer
+    * fails, naming the variable. */
+  def cores(env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS='$v' is not a positive integer"))
+    }
+
+  /** The session conf for `cores` local cores. */
+  def conf(cores: Int): Map[String, String] = Map(
+    "spark.master" -> s"local[$cores]",
+    // 4 waves per core keeps all cores busy through uneven sort costs (a
+    // single wave stalls on stragglers)
+    "spark.sql.shuffle.partitions" -> (4 * cores).toString,
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> ObjHashFallback.toString,
+    "spark.sql.windowExec.buffer.in.memory.threshold" -> WindowBuffer.toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** The shared driver session on [[cores]] local cores, logging at WARN. */
+  def session(): SparkSession = {
+    val spark = conf(cores()).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

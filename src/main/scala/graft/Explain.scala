@@ -52,7 +52,7 @@ object Explain {
     // default flagship plan (round 6): the input is pre-grouped, so the
     // zero-shuffle typed kernel is the physical plan — NO exchange, no
     // sort, no window state anywhere
-    val flagDefault = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
+    val flagDefault = graft.pipeline.FlagshipJob.consumeAll(corpus)
     val flagDefaultPlan = flagDefault.queryExecution.executedPlan.toString
     println("=== flagship default (zero-shuffle per-doc kernel) ===")
     flagDefault.explain("formatted")

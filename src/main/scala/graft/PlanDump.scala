@@ -1,36 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * plans/r06/<query>_{before,after}.txt evidence the optimization rounds
-  * commit. Usage:
+  * commit, planned on the shared [[Driver.session]]. Usage:
   *   sbt "runMain graft.PlanDump <outDir> <suffix> <query1> <query2> ..."
-  * Special names: `flagship` (FlagshipJob.windowConsumeAll on the bench
-  * corpus), `flagship_window_reference`, `flagship_regroup`. */
+  * Special names: `flagship` (FlagshipJob.consumeAll on Bench's default
+  * corpus, generated if missing), `flagship_window_reference`,
+  * `flagship_regroup`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = Driver.sfDir
+    val spark = Driver.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
-    def corpus = {
-      val path = s"${sys.props("java.io.tmpdir")}/graft_corpus_200000_p256"
-      spark.read.parquet(path)
-    }
+    lazy val corpus = spark.read.parquet(Bench.ensureCorpus(spark, Bench.DefaultDocs))
     names.foreach { name =>
       val df = name match {
-        case "flagship" => graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
+        case "flagship" => graft.pipeline.FlagshipJob.consumeAll(corpus)
         case "flagship_window_reference" =>
           graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
         case "flagship_regroup" => graft.pipeline.FlagshipJob.regroupConsumeAll(corpus)

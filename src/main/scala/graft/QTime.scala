@@ -1,23 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timer: `runMain graft.QTime q_a,q_b [sfDir] [reps]`
-  * times just the named [[SparkEntry.queries]] entries (3 reps default) —
-  * the fast feedback loop for optimizing one operator without paying a
-  * full Bench pass. Also usable sbt-free via tools/bench_java.sh. */
+  * times just the named [[SparkEntry.queries]] entries (3 reps default) on
+  * the shared [[Driver.session]], so its timings reproduce Bench's — the
+  * fast feedback loop for optimizing one operator without paying a full
+  * Bench pass. Also usable sbt-free via tools/bench_java.sh. */
 object QTime {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QTime <q1,q2,...> [sfDir] [reps]")
     val names = args(0).split(",").toSeq
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val sfDir = if (args.length > 1) args(1) else Driver.sfDir
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Driver.session()
     for (n <- names; rep <- 1 to reps) {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()

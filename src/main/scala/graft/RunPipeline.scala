@@ -1,10 +1,7 @@
 package graft
 
 import graft.core.{SyntheticCorpus, TokenAdapter}
-import graft.features.{Kinematic, TokenKernel}
-import graft.pipeline.Pipeline
-import graft.session.Sessionize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.pipeline.{FlagshipJob, Pipeline}
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline driver (the north rule's spark-submit story): the
@@ -16,8 +13,10 @@ import org.apache.spark.sql.functions._
   *   sbt -batch "runMain graft.RunPipeline <outRoot> [nDocs] [nBuckets] [path]"
   *   # or spark-submit --class graft.RunPipeline <jar> <outRoot> ...
   *
-  * `path` = grouped (default; shuffle-free typed kernel) | window
-  * (explode → fused window chain — the general path for ungrouped input).
+  * `path` = grouped (default; [[FlagshipJob.consumeAll]], the shuffle-free
+  * typed kernel) | window ([[FlagshipJob.windowReferenceConsumeAll]]:
+  * explode → fused window chain). Both write the same consume-all schema;
+  * any other value is rejected. Runs on the shared [[Driver.session]].
   * Re-running with the same outRoot skips completed buckets (crash-resume);
   * pass a fresh outRoot for a clean run. Exit asserts the token-array
   * round-trip invariant and prints one JSON status line.
@@ -29,16 +28,10 @@ object RunPipeline {
     val nDocs = args.lift(1).map(_.toLong).getOrElse(100000L)
     val nBuckets = args.lift(2).map(_.toInt).getOrElse(16)
     val pathKind = args.lift(3).getOrElse("grouped")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    require(pathKind == "grouped" || pathKind == "window",
+      s"path must be grouped or window, got '$pathKind'")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Driver.session()
 
     val corpus = SyntheticCorpus.generate(spark, nDocs).cache()
     val runner = Pipeline.local(outRoot)
@@ -65,8 +58,7 @@ object RunPipeline {
 
     // stage 1: per-doc feature vectors, bucketed by entity, lineage per bucket
     val stage1 = runner.runStage("feature_vectors", corpus, "doc_id", nBuckets) { in =>
-      if (pathKind == "grouped") graft.pipeline.FlagshipJob.groupedConsumeAll(in)
-      else graft.pipeline.FlagshipJob.windowConsumeAll(in)
+      if (pathKind == "grouped") FlagshipJob.consumeAll(in) else FlagshipJob.windowReferenceConsumeAll(in)
     }
 
     // stage 2: source-level rollup of stage-1 output (reads committed stage)

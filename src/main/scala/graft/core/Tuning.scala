@@ -14,7 +14,7 @@ import org.slf4j.LoggerFactory
   * intermediate (banded-dedup pair results, minhash signature caches,
   * stream-as-of compacted histories, cluster-propagation frontiers) is
   * written, and then RE-READ by every consumer, at the session's raw
-  * shuffle-partition count. Measured at sf0.1/local[32] (BenchExtra stage
+  * shuffle-partition count. Measured at sf0.1/local[32] (per-stage task
   * log): the dedup/stream queries each spend 1–6 task-s in 128-task stages
   * moving <6 MB — pure per-task scheduling overhead — and the stream-as-of
   * replay re-reads its 128-partition cached histories once per micro-batch

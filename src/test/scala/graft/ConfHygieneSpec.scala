@@ -14,6 +14,18 @@ class ConfHygieneSpec extends SparkSpec {
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("src/main reads exactly the 10 documented SPARK_GRAFT_* variables") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.nonEmpty, "no sources under src/main/scala")
+    val found = files.flatMap(f => "SPARK_GRAFT_[A-Z_]+".r.findAllIn(java.nio.file.Files.readString(f))).toSet
+    val documented = Seq("SF_DIR", "CPUS", "AQE_CACHED", "BENCH_DOCS", "BENCH_REPS",
+      "FLAGSHIP_ONLY", "QUERY_REPS", "PATHS", "BENCH_OUT", "ONLY").map("SPARK_GRAFT_" + _).toSet
+    assert(found == documented,
+      s"undocumented: ${(found -- documented).toSeq.sorted}; missing: ${(documented -- found).toSeq.sorted}")
+  }
+
   test("SPARK_GRAFT_AQE_CACHED parses case-insensitively; an unparseable value keeps the default") {
     assert(Tuning.adaptiveCachedFlag(None))
     assert(Tuning.adaptiveCachedFlag(Some("true")))

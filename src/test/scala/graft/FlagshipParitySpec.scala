@@ -5,8 +5,8 @@ import graft.features.Kinematic
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Round-6 optimization guard: `FlagshipJob.windowConsumeAll` now plans the
-  * zero-shuffle per-doc kernel by default (the corpus input is pre-grouped,
+/** Round-6 optimization guard: `FlagshipJob.consumeAll` plans the
+  * zero-shuffle per-doc kernel (the corpus input is pre-grouped,
   * so the explode→exchange→window chain re-derived a grouping the storage
   * already had). The REFERENCE window formulation is retained verbatim
   * (`windowReferenceConsumeAll`), and this spec pins the optimization's
@@ -48,15 +48,13 @@ class FlagshipParitySpec extends SparkSpec {
   }
 
   test("default flagship (kernel) == reference window formulation") {
-    assert(sys.env.get("SPARK_GRAFT_FLAGSHIP_IMPL").forall(_ == "grouped"),
-      "spec must run with the default impl selection")
-    val default = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
+    val default = graft.pipeline.FlagshipJob.consumeAll(corpus)
     val reference = graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
     assertConsumeAllEqual(default, reference, "kernel vs window reference")
   }
 
   test("default flagship plan is shuffle-free (no exchange, no window)") {
-    val plan = graft.pipeline.FlagshipJob.windowConsumeAll(corpus)
+    val plan = graft.pipeline.FlagshipJob.consumeAll(corpus)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"), s"unexpected exchange in:\n$plan")
     assert(!plan.contains("Window"), s"unexpected window operator in:\n$plan")
@@ -65,7 +63,7 @@ class FlagshipParitySpec extends SparkSpec {
   test("regroup impl column selection == reference window formulation") {
     val regroup = graft.pipeline.FlagshipJob
       .regroupConsumeAll(corpus)
-      .select(graft.pipeline.FlagshipJob.windowConsumeAll(corpus).columns.toIndexedSeq.map(col): _*)
+      .select(graft.pipeline.FlagshipJob.consumeAll(corpus).columns.toIndexedSeq.map(col): _*)
     val reference = graft.pipeline.FlagshipJob.windowReferenceConsumeAll(corpus)
     assertConsumeAllEqual(regroup, reference, "regroup vs window reference")
   }

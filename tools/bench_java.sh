@@ -11,8 +11,11 @@ for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.refl
          java.base/sun.util.calendar; do
   ADDOPENS="$ADDOPENS --add-opens $p=ALL-UNNAMED"
 done
+# heap: SPARK_DRIVER_MEM, else half of physical memory clamped to 2–8 GiB
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' \
+  </proc/meminfo 2>/dev/null || echo 2g)}"
 exec java $ADDOPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-48g}" \
+  -Xmx"$MEM" \
   -cp "$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*" \
   "${1:-graft.Bench}" "${@:2}"

@@ -3,12 +3,14 @@
 # local[N] and local[4N] on the same deterministic input; report throughput
 # at both + efficiency T_{4N}/(4·T_N). Run from /root/repo.
 #
-# Three physical paths are swept:
-#   window  — explode → shuffle → fused window chain (semantics reference)
-#   grouped — typed per-doc kernel, zero shuffle (pre-grouped scale path)
-#   regroup — ungrouped grid → ONE collect_list exchange → per-doc kernel
-#             (the general-path replacement for the window chain)
-# Sizes differ so each run lands in a stable 3–60 s measurement band.
+# Three Bench legs are swept (SPARK_GRAFT_PATHS):
+#   window  — the flagship leg: FlagshipJob.consumeAll, the zero-shuffle
+#             per-doc kernel in the consume-all schema
+#   grouped — the bare typed per-doc kernel, zero shuffle
+#   regroup — ungrouped grid → each doc's run packed into one row → ONE
+#             exchange + key-only sort → per-doc kernel (the general path)
+# Sizes differ so each run lands in a stable 3–60 s measurement band. The
+# JVM heap is the build's default unless SPARK_DRIVER_MEM is set.
 set -eo pipefail
 REPS="${SPARK_GRAFT_BENCH_REPS:-3}"
 OUT="${1:-/tmp/graft_scaling}"
@@ -22,7 +24,7 @@ for CPUS in $N $N4; do
     [ "$PATHKIND" = grouped ] && DOCS="${SPARK_GRAFT_GDOCS:-4000000}"
     [ "$PATHKIND" = regroup ] && DOCS="${SPARK_GRAFT_RDOCS:-1000000}"
     echo "== local[$CPUS] $PATHKIND =="
-    SPARK_DRIVER_MEM=64g SPARK_GRAFT_FLAGSHIP_ONLY=1 SPARK_GRAFT_PATHS=$PATHKIND \
+    SPARK_GRAFT_FLAGSHIP_ONLY=1 SPARK_GRAFT_PATHS=$PATHKIND \
     SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_BENCH_DOCS=$DOCS SPARK_GRAFT_BENCH_REPS=$REPS \
     SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
       sbt -batch 'runMain graft.Bench' 2>&1 | grep -m1 '"metric"' | sed 's/^\[info\] //' \
