@@ -28,12 +28,7 @@ object PlanDump {
         // per-micro-batch stream-static join — dumped here in batch mode
         // (same operators) with/without the round-6 broadcast
         case "stream_asof_join_shuffle" | "stream_asof_join_broadcast" =>
-          import org.apache.spark.sql.functions._
-          val probe = spark.read.parquet(s"$sfDir/events.parquet")
-            .select(col("event_id"), col("user_id"), col("ts"))
-          val build = spark.read.parquet(s"$sfDir/orders.parquet")
-            .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-              col("o_orderkey"), col("o_totalprice"))
+          val (probe, build) = SparkEntry.asOfSides(spark, sfDir)
           val hist = graft.streaming.StreamAsOf.compactBuild(
             build, "user_id", "ts", Seq("o_orderkey", "o_totalprice"), Seq("o_orderkey"))
           graft.streaming.StreamAsOf.enrichCompacted(probe, hist, "user_id", "ts",

@@ -96,12 +96,4 @@ object Canonical {
     val rep = if (buckets > 0) df.repartition(buckets, s.idCol) else df.repartition(s.idCol)
     rep.sortWithinPartitions(s.idCol +: s.ordering: _*)
   }
-
-  /** Salt an entity key into `buckets` sub-entities of ≤ `bandRows` rows each
-    * to break window-skew from oversized entities (SURVEY.md §4.2#2). Window
-    * functions over the salted key lose cross-band lag context; callers that
-    * need lag-k across bands must overlap bands by k rows (see
-    * [[graft.features.Kinematic.withKinematicsSalted]]). */
-  def saltedId(s: TrajSchema, bandRows: Int): Column =
-    concat_ws("#", s.idCol, floor((row_number().over(s.w) - 1) / bandRows).cast("string"))
 }

@@ -125,11 +125,14 @@ object Stats {
       .select(keys.map(k => col(s"_mo.`$k`").as(k)) ++ ordered: _*)
   }
 
-  /** G2 long form — (entity[, seg], feature, stat, value); derived from the
+  /** G2 long form — (entity[, seg], stat_feature, value); derived from the
     * wide agg by an unpivot, not by re-aggregating. */
-  def kinematicStatsLong(df: DataFrame, s: TrajSchema, segCol: Option[String] = None): DataFrame = {
-    val wide = kinematicStatsWide(df, s, segCol)
-    val keys = s.id +: segCol.toSeq
+  def kinematicStatsLong(df: DataFrame, s: TrajSchema, segCol: Option[String] = None): DataFrame =
+    unpivotLong(kinematicStatsWide(df, s, segCol), s.id +: segCol.toSeq)
+
+  /** Unpivot every non-key column of `wide` into (keys…, stat_feature,
+    * value as double); null values are kept. */
+  def unpivotLong(wide: DataFrame, keys: Seq[String]): DataFrame = {
     val valueCols = wide.columns.filterNot(keys.contains)
     val stackExpr = valueCols
       .map(c => s"'${c.replace("'", "")}', cast(`$c` as double)")

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.SparkEntry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -37,7 +38,6 @@ object StreamDrive {
   /** Stage `df` as `nRanges` parquet files ordered by `orderCol`, with
     * strictly increasing mtimes, under a fresh temp dir. */
   private def stageRanges(df: DataFrame, orderCol: String, nRanges: Int): Path = {
-    graft.core.Tuning.ensureAdaptiveCachedPlans(df.sparkSession)
     val stage = Files.createTempDirectory("graft_stream_stage_")
     df.repartitionByRange(nRanges, col(orderCol))
       .write.mode("overwrite").parquet(stage.toString)
@@ -126,7 +126,7 @@ object StreamDrive {
     * text. Output: (content_hash, n_chars) — constant within a duplicate
     * group, hence order-independent. */
   def dedupOverDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = SparkEntry.table(spark, sfDir, "documents")
       .withColumn("ts", timestamp_micros(lit(1577836800000000L) + col("doc_id")))
     val stage = stageRanges(docs, "ts", 4)
     replay(spark, stage, s =>
@@ -141,7 +141,7 @@ object StreamDrive {
       spark: SparkSession, sfDir: String, gapSeconds: Double = 3600.0): DataFrame = {
     // testdata ts is TIMESTAMP_NTZ; watermarks require TIMESTAMP (LTZ).
     // Session TZ is UTC, so NTZ->LTZ->NTZ is value-identity both ways.
-    val pts = spark.read.parquet(s"$sfDir/events.parquet")
+    val pts = SparkEntry.events(spark, sfDir)
       .select(col("user_id").cast("string").as("entity"), col("ts").cast("timestamp").as("ts"))
     val stage = stageRanges(pts, "ts", 4)
     // idleStateTimeoutSec = None: the hash-vs-batch oracle needs globally
@@ -168,12 +168,7 @@ object StreamDrive {
     * SF ([[StreamAsOf.droppedBuilds]] = 0 there), so the output equals the
     * unbounded as-of and the shared oracle stays exact. */
   def asOfOverEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.core.Tuning.ensureAdaptiveCachedPlans(spark) // before the cache() below
-    val probe = spark.read.parquet(s"$sfDir/events.parquet")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val build = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-        col("o_orderkey"), col("o_totalprice"))
+    val (probe, build) = SparkEntry.asOfSides(spark, sfDir)
     val histories = StreamAsOf.compactBuild(build, "user_id", "ts",
       Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"), keepLastN = 64)
       .cache()

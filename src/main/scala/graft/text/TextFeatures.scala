@@ -16,10 +16,6 @@ object TextFeatures {
   private def countMatches(text: Column, pattern: String): Column =
     length(text) - length(regexp_replace(text, pattern, ""))
 
-  /** Whitespace token count (empties dropped). */
-  def withTokenCount(df: DataFrame, text: String = "text"): DataFrame =
-    df.withColumn("n_tokens", size(TextHash.tokens(col(text))))
-
   /** PII-ish surface-pattern counts (emails, IPv4s, long digit runs) — the
     * signal a scrubbing/filter stage keys on before redaction. Counts only:
     * redaction itself is a `regexp_replace` away and policy-specific.

@@ -61,6 +61,25 @@ class KinematicSpec extends SparkSpec {
     assert(nl == 5) // all five (lat, lon) pairs distinct in the de-duped fixture
   }
 
+  test("K4 withPointWithinRange equals the unrounded inline haversine predicate") {
+    val (lat, lon, rangeM) = (39.984094, 116.319236, 1000.0)
+    val got = Kinematic.withPointWithinRange(fixture, S, lat, lon, rangeM)
+      .withColumn("inline", Geo.haversine(lit(lat), lit(lon), col("lat"), col("lon")) <= rangeM)
+      .select(col(s"`Within_${rangeM}_m`"), col("inline")).collect().toSeq
+    assert(got.forall(r => r.getBoolean(0) == r.getBoolean(1)))
+    assert(got.map(_.getBoolean(0)).toSet == Set(true, false)) // both sides of the range
+  }
+
+  test("K14 distanceTravelledByDate equals the inline per-date distance sum") {
+    val got = Kinematic.distanceTravelledByDate(fixture, S, "1", "2008-10-23").collect().toSeq
+    val inline = Kinematic.withDistance(
+        fixture.where(col("traj_id") === "1" && to_date(col("ts")) === to_date(lit("2008-10-23"))), S)
+      .groupBy(col("traj_id")).agg(sum(col(Kinematic.Distance))).collect().toSeq
+    assert(got == inline && got.size == 1)
+    assertClose(Some(got.head.getDouble(1)), Some(dist.flatten.sum))
+    assert(Kinematic.distanceTravelledByDate(fixture, S, "1", "2008-10-24").count() == 0)
+  }
+
   test("salted/banded kinematics EXACTLY equals the unsalted plan") {
     val corpus = SyntheticCorpus.generate(spark, nDocs = 40, medianLen = 50, skewEvery = 10, skewFactor = 8)
     val (grid, ts) = TokenAdapter.explodeTokens(corpus)
