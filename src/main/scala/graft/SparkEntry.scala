@@ -82,6 +82,11 @@ object SparkEntry {
       .withColumn("lat", when(pmod(col("event_id"), lit(7L)) < 3L, lit(null).cast("double")).otherwise(col("lat")))
       .withColumn("lon", when(pmod(col("event_id"), lit(5L)) < 2L, lit(null).cast("double")).otherwise(col("lon")))
 
+  /** Committed traffic-format CSV fixture, resolved against the working
+    * directory (the repository root) so both engines read the same file. */
+  private val TrafficCsv: String =
+    new java.io.File("src/test/resources/car_traffic_sample.csv").getAbsolutePath
+
   /** The same view in DuckDB SQL — MUST mirror the Spark expression order
     * op-for-op (all ops exact IEEE, so the two engines agree bitwise). */
   val TrajSql: String =
@@ -533,12 +538,12 @@ object SparkEntry {
     // over the committed traffic-format CSV fixture
     QuerySpec("q_src_traffic_loader", (sp, _) => {
       val (df, _) = graft.sources.Datasets.load(
-        sp, "traffic", "/root/repo/src/test/resources/car_traffic_sample.csv")
+        sp, "traffic", TrafficCsv)
       df.select(col("traj_id"), col("ts"), col("lat"), col("lon"), col("velocity"))
     },
-      """SELECT cast(traj_id AS varchar) AS traj_id, cast(DateTime AS timestamp) AS ts,
+      s"""SELECT cast(traj_id AS varchar) AS traj_id, cast(DateTime AS timestamp) AS ts,
         |  cast(lat AS double) AS lat, cast("long" AS double) AS lon, velocity
-        |FROM read_csv_auto('/root/repo/src/test/resources/car_traffic_sample.csv', header = true)""".stripMargin),
+        |FROM read_csv_auto('$TrafficCsv', header = true)""".stripMargin),
 
     // G-gap — sessionize (exact micros comparison)
     QuerySpec("q_ses_gap", (sp, dir) =>
