@@ -93,10 +93,7 @@ object Explain {
     check("visited: BroadcastHashJoin used")(visitedPlan.contains("BroadcastHashJoin"))
 
     // --- as-of join: one exchange over the union, no nested-loop ---
-    val probe = SparkEntry.events(spark, sfDir).select(col("user_id"), col("ts"), col("event_id"))
-    val build = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-        col("o_orderkey"), col("o_totalprice"))
+    val (probe, build) = SparkEntry.asOfSides(spark, sfDir)
     val asof = graft.asof.AsOfJoin.backward(probe, build, "user_id", "ts",
       Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"))
     val asofPlan = asof.queryExecution.executedPlan.toString
@@ -187,51 +184,45 @@ object Explain {
     check("stats: no percentile aggregate")(!statsPlan.toLowerCase.contains("percentile"))
     check("stats: no ObjectHashAggregate")(!statsPlan.contains("ObjectHashAggregate"))
 
-    // --- embedding near-dup default path: bucketed, never all-pairs ---
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val nearDup = graft.dedup.Dedup.embeddingNearDupPairs(emb, threshold = 0.2)
-    val nearDupPlan = nearDup.queryExecution.executedPlan.toString
-    println("=== embedding near-dup (banded LSH — no cartesian product) ===")
-    check("neardup: no CartesianProduct")(!nearDupPlan.contains("CartesianProduct"))
-    check("neardup: no BroadcastNestedLoopJoin")(!nearDupPlan.contains("BroadcastNestedLoop"))
+    // --- banded pair joins (embedding LSH, MinHash LSH, SimHash
+    // pigeonhole bands): an equi-join on (band, bucket), never all-pairs.
+    // Both sides of the self-join must stay canonically equal so exchange
+    // reuse evaluates the banded lineage (posexplode + window valve +
+    // observe) ONCE — a one-sided observe metric once split the subtrees.
+    // Assert the reuse precondition (canonical equality) on the self-join's
+    // children: AQE's stage cache and the non-adaptive ReuseExchange rule
+    // both key on exactly this. ---
+    val docs = SparkEntry.table(spark, sfDir, "documents")
+    val emb = SparkEntry.table(spark, sfDir, "embeddings")
+    Seq(
+      "neardup" -> graft.dedup.Dedup.embeddingNearDupPairs(emb, threshold = 0.2),
+      "minhash pairs" -> graft.dedup.Dedup.minhashLshPairs(docs, estThreshold = 0.25),
+      "simhash pairs" -> graft.dedup.Dedup.simhashHammingPairs(docs, maxHamming = 3)
+    ).foreach { case (name, pairs) =>
+      val plan = pairs.queryExecution.executedPlan.toString
+      println(s"=== $name (banded equality self-join) ===")
+      check(s"$name: no CartesianProduct")(!plan.contains("CartesianProduct"))
+      check(s"$name: no BroadcastNestedLoopJoin")(!plan.contains("BroadcastNestedLoop"))
+      check(s"$name: banded self-join children canonically equal (exchange reusable)")(
+        pairs.queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join
+              if j.left.canonicalized == j.right.canonicalized => j
+        }.nonEmpty)
+    }
 
     // --- exact dedup: ONE exchange (window min over content_hash) ---
-    val exactPlan = graft.dedup.Dedup.exact(
-      spark.read.parquet(s"$sfDir/documents.parquet")).queryExecution.executedPlan.toString
+    val exactPlan = graft.dedup.Dedup.exact(docs).queryExecution.executedPlan.toString
     println("=== exact dedup (single-shuffle keeper) ===")
     check("exact dedup: exactly one exchange")(
       "Exchange".r.findAllIn(exactPlan).length == 1)
     check("exact dedup: no join")(!exactPlan.contains("Join"))
 
-    // --- simhash pair search: pigeonhole bands — no all-pairs shapes ---
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    // eager=false: audit the REAL banded-join plan, not the materialized
-    // checkpoint scan the eager default returns
-    val shp = graft.dedup.Dedup.simhashHammingPairs(docs, maxHamming = 3, eager = false)
-    val shpPlan = shp.queryExecution.executedPlan.toString
-    println("=== simhash hamming pairs (banded equality join) ===")
-    check("simhash pairs: no CartesianProduct")(!shpPlan.contains("CartesianProduct"))
-    check("simhash pairs: no BroadcastNestedLoopJoin")(!shpPlan.contains("BroadcastNestedLoop"))
-    // both sides of the banded self-join must stay canonically equal so
-    // exchange reuse evaluates the banded lineage (posexplode + window
-    // valve + observe) ONCE — the one-sided observe metric broke this in
-    // r3 (ADVICE) by splitting the subtrees. Assert the reuse precondition
-    // (canonical equality) on the self-join's children: AQE's stage cache
-    // and the non-adaptive ReuseExchange rule both key on exactly this.
-    val selfJoinReusable = shp.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.left.canonicalized == j.right.canonicalized => j
-    }
-    check("simhash pairs: banded self-join children canonically equal (exchange reusable)")(
-      selfJoinReusable.nonEmpty)
-
     // --- IVF: no exchange may key on an array column (the centroid
     // assignment groups by the scalar id only; the embedding rides via
     // first() — VERDICT r4 #4) ---
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val ivf = graft.ann.Similarity.ivfTopK(
-      emb0.where(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
-      emb0, k = 3, nCentroids = 4, nProbe = 2)
+      emb.where(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding")),
+      emb, k = 3, nCentroids = 4, nProbe = 2)
     val ivfPlan = ivf.queryExecution.executedPlan.toString
     println("=== ivf top-k (scalar-keyed exchanges only) ===")
     check("ivf: no exchange keyed on the embedding array")(
@@ -456,8 +447,7 @@ object Explain {
     // --- BPE pair counts: per-row pair explode (no join), ONE
     // map-side-combined aggregate, topK via TakeOrdered (no global sort) ---
     val pc = graft.text.TokenStats.pairCounts(
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), graft.functions.TextHash.tokenHashes(col("text")).as("tokens")),
+      docs.select(col("doc_id"), graft.functions.TextHash.tokenHashes(col("text")).as("tokens")),
       topK = 64)
     val pcPlan = pc.queryExecution.executedPlan.toString
     println("=== token pair counts (map-combined agg + TakeOrdered) ===")
@@ -471,14 +461,10 @@ object Explain {
     // joins on the ENTITY with a hash join — never nested-loop over
     // histories — and the keep-last-N compaction is a map-side
     // WindowGroupLimit (a whale entity never ships its full history) ---
-    val saProbe = SparkEntry.events(spark, sfDir).select(col("event_id"), col("user_id"), col("ts"))
-    val saBuild = spark.read.parquet(s"$sfDir/orders.parquet")
-      .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"),
-        col("o_orderkey"), col("o_totalprice"))
-    val saHist = graft.streaming.StreamAsOf.compactBuild(saBuild, "user_id", "ts",
+    val saHist = graft.streaming.StreamAsOf.compactBuild(build, "user_id", "ts",
       Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"), keepLastN = 64)
     val saHistPlan = saHist.queryExecution.executedPlan.toString
-    val sa = graft.streaming.StreamAsOf.enrichCompacted(saProbe, saHist, "user_id", "ts",
+    val sa = graft.streaming.StreamAsOf.enrichCompacted(probe, saHist, "user_id", "ts",
       Seq("o_orderkey", "o_totalprice"))
     val saPlan = sa.queryExecution.executedPlan.toString
     println("=== stream as-of (stateless stream-static equi-join, bounded build) ===")

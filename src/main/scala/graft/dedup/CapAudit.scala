@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.slf4j.LoggerFactory
@@ -43,6 +44,19 @@ private[graft] object CapAudit {
       sum(droppedRow).cast("long").as("dropped_rows"),
       lit(audit).as("audit"))
   }
+
+  /** Hot-key valve: drop every row whose `keys` group holds more than
+    * `cap` rows, counting the drops through [[observeDrops]]. The group
+    * size is a window count, so when the caller's next operator shuffles on
+    * the same keys (a bucket or cell equi-join) the valve adds no exchange.
+    * `cap = Int.MaxValue` disables the valve and returns `df` unchanged. */
+  def dropHotKeys(df: DataFrame, keys: Seq[Column], cap: Int, what: String, audit: String): DataFrame =
+    if (cap == Int.MaxValue) df
+    else {
+      val counted = df.withColumn("_sz", count(lit(1)).over(Window.partitionBy(keys: _*)))
+      observeDrops(counted, when(col("_sz") > cap, 1L).otherwise(0L), what, audit)
+        .where(col("_sz") <= cap).drop("_sz")
+    }
 
   /** Collect executed `CollectMetricsExec` rows, descending through AQE
     * wrappers — Spark 4.1's `qe.observedMetrics` does NOT surface metrics

@@ -423,93 +423,59 @@ object Dedup {
     * sane bucketing (a bucket that large means the band is mis-sized — see
     * the per-operator sizing laws). Pairs inside a dropped bucket are
     * missed unless another band catches them (documented recall loss;
-    * [[bandedCandidates]]'s callers expose the knob). */
+    * [[bandedPairs]]' callers expose the knob). */
   val DefaultMaxBucket: Int = 100000
 
-  /** Shared banded-LSH candidate generator: explode each row's per-band
-    * bucket array, drop (band, bucket)s hotter than `maxBucket`
-    * ([[DefaultMaxBucket]]), equality-self-join on the survivors, keep
-    * NARROW ordered (id_a, id_b) pairs (the distinct dedups 2 ids, not wide
-    * payloads — the wide variant measured 10× slower). Every banded dedup
-    * family (MinHash bands, SimHash pigeonhole bands, hyperplane-LSH bands)
-    * funnels through here so sizing/skew fixes land once. */
-  private def bandedCandidates(
-      df: DataFrame, idCol: Column, bandBuckets: Column,
-      maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val banded0 = df.select(idCol.as("_id"), posexplode(bandBuckets).as(Seq("_band", "_bb")))
-    val (bandedA, bandedB) =
-      if (maxBucket == Int.MaxValue) (banded0, banded0)
-      else {
-        // window count on the SAME (band, bucket) clustering the self-join
-        // shuffles on — one exchange, no second evaluation of the (possibly
-        // expensive) bucket lineage for a separate aggregate+join
-        val counted = banded0.withColumn("_sz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("_band"), col("_bb"))))
-        // the valve observation sits on the ONE shared frame BOTH join
-        // sides derive from: identical subtrees keep the two exchange
-        // children canonically equal, so Spark plans a ReusedExchange and
-        // the banded lineage (posexplode + window count) is evaluated ONCE.
-        // (A one-sided observation broke that equality and doubled the
-        // whole lineage — ADVICE r3. Duplicate CollectMetrics names are
-        // legal precisely because the subtrees are identical.) If exchange
-        // reuse is disabled (non-default conf) the lineage evaluates twice
-        // — a perf regression only: each metrics node still counts every
-        // dropped row exactly once over the full input, and the CapAudit
-        // listener dedups the identically-named rows, so the reported drop
-        // count stays correct either way.
-        val kept = CapAudit
-          .observeDrops(counted, when(col("_sz") > maxBucket, 1L).otherwise(0L),
-            "banded_bucket_valve", "Dedup-band bucket sizes (raise maxBucket or re-band)")
-          .where(col("_sz") <= maxBucket).drop("_sz")
-        (kept, kept)
-      }
-    bandedA.select(col("_id").as("id_a"), col("_band"), col("_bb"))
-      .join(bandedB.select(col("_id").as("id_b"), col("_band"), col("_bb")), Seq("_band", "_bb"))
+  /** The one banded-LSH self-join every banded family (MinHash bands,
+    * SimHash pigeonhole bands, hyperplane-LSH bands) plans through: explode
+    * each row's per-band bucket array, drop (band, bucket)s hotter than
+    * `maxBucket` ([[DefaultMaxBucket]]), equality-self-join on the
+    * survivors and keep ordered pairs `id_a < id_b`. Each `payload` column
+    * `n` rides through the join as `n_a` and `n_b`, so the caller scores
+    * and filters each candidate in the join stage and only true pairs
+    * cross the final exchange (its `distinct`: a pair colliding in several
+    * bands appears once per band here; the score is a function of the
+    * pair, so one row per true pair survives). Against the former shapes (narrow
+    * distinct (id, id) pairs re-joined twice to their payloads, plus a
+    * persist and an eager `count()` on MinHash and SimHash) `graft.QTime`
+    * at sf0.1 on 4 cores (median of 3 alternating pairs, reps 2–5) read
+    * q_dedup_embed 4.27 → 2.47 s, q_dedup_lsh_pairs 1.97 → 1.80 s,
+    * q_dedup_simhash_pairs 1.42 → 1.33 s, q_dedup_keep_best 2.52 → 2.17 s.
+    *
+    * Explode and valve run on ONE shared frame both join sides derive
+    * from: identical subtrees keep the two exchange children canonically
+    * equal, so Spark plans a ReusedExchange and the banded lineage
+    * (posexplode + window count + observe) is evaluated once. (A one-sided
+    * observation broke that equality and doubled the lineage. Duplicate
+    * CollectMetrics names are legal precisely because the subtrees are
+    * identical; if exchange reuse is disabled the lineage evaluates twice,
+    * each metrics node still counts every dropped row once and the
+    * CapAudit listener dedups the identically named rows.)
+    *
+    * Output: (id_a, id_b, n_a…, n_b…). */
+  private def bandedPairs(
+      df: DataFrame, idCol: Column, payload: Seq[(String, Column)],
+      bandBuckets: Column, maxBucket: Int): DataFrame = {
+    val names = payload.map(_._1)
+    // payload is projected BEFORE the explode, so it is computed once per
+    // row, not once per band
+    val banded = CapAudit.dropHotKeys(
+      df.select(idCol.as("_id") +: bandBuckets.as("_bbs") +: payload.map { case (n, c) => c.as(n) }: _*)
+        .select(col("_id") +: names.map(col) :+ posexplode(col("_bbs")).as(Seq("_band", "_bb")): _*),
+      Seq(col("_band"), col("_bb")), maxBucket,
+      "banded_bucket_valve", "Dedup-band bucket sizes (raise maxBucket or re-band)")
+    def side(s: String) = banded.select(
+      col("_id").as(s"id_$s") +: col("_band") +: col("_bb") +: names.map(n => col(n).as(s"${n}_$s")): _*)
+    side("a").join(side("b"), Seq("_band", "_bb"))
       .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
+      .drop("_band", "_bb")
   }
 
-  /** MinHash-LSH candidate pairs: split the signature into `bands` bands of
-    * numHashes/bands rows; docs sharing any band bucket become candidates;
-    * similarity estimate = fraction of matching signature positions.
-    * At cluster scale the band explode keys the ONE shuffle; no cross join
-    * ever materializes. */
-  /** Eager-consume helper for the banded operators' signature caches: the
-    * signature frame appears three times in the pair plan (band explode +
-    * both re-rank joins), so it is persisted — but a lazily returned frame
-    * would pin that cache for its whole lifetime (a 10⁹-row signature table
-    * must not sit in executor storage after the pairs are computed). With
-    * `eager = true` (default) the SMALL pair result is persisted
-    * (MEMORY_AND_DISK) and materialized with a Dataset action — which also
-    * fires the [[CapAudit]] observed metrics — and the signature cache is
-    * released before returning: the only persisted blocks that survive are
-    * the pair result itself (asserted in DedupCacheSpec; callers may
-    * `unpersist()` the returned frame sooner). Repeated eager calls do NOT
-    * accumulate in the cache manager: each call unpersists the previous
-    * eager result (ADVICE r3 — min-of-N bench reps were pinning one cached
-    * pair frame per rep), so at most ONE eager pair result is ever resident
-    * and a frame returned by an earlier call lazily recomputes if re-read.
-    * `eager = false` returns the fully lazy plan with NO persists at all —
-    * the signature lineage recomputes per reference (3×), the audit mode
-    * Explain uses. */
-  private val lastEagerResult =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private def consumeEagerly(out: DataFrame, cached: DataFrame, eager: Boolean): DataFrame =
-    if (eager) {
-      val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      mat.count()
-      cached.unpersist(false)
-      val prev = lastEagerResult.getAndSet(mat)
-      if (prev != null && (prev.sparkSession eq mat.sparkSession)) prev.unpersist(false)
-      mat
-    } else out
-
-  /** Persist `df` only on the eager path (the lazy path has no handle for
-    * callers to evict — ADVICE r3 — so it must not pin anything). */
-  private def persistIfEager(df: DataFrame, eager: Boolean): DataFrame =
-    if (eager) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else df
-
+  /** MinHash-LSH near-duplicate pairs: split the signature into `bands`
+    * bands of numHashes/bands rows; docs sharing any band bucket become
+    * candidates; similarity estimate = fraction of matching signature
+    * positions, computed on the join output ([[bandedPairs]]). No cross
+    * join ever materializes. Output: (id_a, id_b, est_jaccard). */
   def minhashLshPairs(
       df: DataFrame,
       k: Int = 3,
@@ -518,24 +484,18 @@ object Dedup {
       estThreshold: Double = 0.5,
       id: String = "doc_id",
       text: String = "text",
-      maxBucket: Int = DefaultMaxBucket,
-      eager: Boolean = true
+      maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
-    val sigs = persistIfEager(minhashSignatures(df, k, numHashes, id, text), eager)
+    val sigs = minhashSignatures(df, k, numHashes, id, text)
     val bandBuckets = transform(sequence(lit(0), lit(bands - 1)), b => slice(col("sig"), b * r + 1, lit(r)))
-    val out = bandedCandidates(sigs, col(id), bandBuckets, maxBucket)
-      .join(sigs.select(col(id).as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(sigs.select(col(id).as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn(
-        "est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
-          .cast("double") / numHashes
-      )
+    bandedPairs(sigs, col(id), Seq("sig" -> col("sig")), bandBuckets, maxBucket)
+      .select(col("id_a"), col("id_b"),
+        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), b => b))
+          .cast("double") / numHashes).as("est_jaccard"))
       .where(col("est_jaccard") >= estThreshold)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
-    consumeEagerly(out, sigs, eager)
+      .distinct()
   }
 
   /** 62-bit SimHash fingerprint: token t contributes ±1 to each bit b
@@ -560,24 +520,6 @@ object Dedup {
       .drop("_n")
   }
 
-  /** SimHash near-duplicate pairs: docs whose 62-bit fingerprints differ in
-    * at most `maxHamming` bits. Candidate generation is the PIGEONHOLE band
-    * trick — split the fingerprint into `maxHamming + 1` bit-bands; any pair
-    * within the hamming budget matches at least one band EXACTLY — so the
-    * join is a narrow equality join on (band, bits), and recall is 1.0
-    * (unlike probabilistic LSH) AS LONG AS the hot-bucket valve does not
-    * bind: buckets above `maxBucket` are dropped, losing their pairs unless
-    * another band catches them. Pass `maxBucket = Int.MaxValue` for the
-    * strict pigeonhole guarantee — but a >10⁵-row bucket at h ≤ 3 means the
-    * corpus needs an exact/minhash dedup pass first, not a bigger join.
-    * Exact `bit_count(xor)` re-rank on the candidates.
-    *
-    * BUDGET ECONOMICS: on a homogeneous corpus every simhash bit is biased
-    * the same way, so band entropy comes from band WIDTH — 62/(h+1) bits.
-    * Measured on driver docs (5k): candidates = 4.7% of all pairs at h=2,
-    * 22% at h=3, ~100% at h=6. Keep the budget small (the Manku-et-al
-    * regime, h ≤ 3) or the equality join degenerates toward all-pairs.
-    * Output: (id_a, id_b, hamming), id_a < id_b. */
   /** Bit offsets/widths distributing `totalBits` over `bands` NON-EMPTY
     * bands (first `totalBits % bands` bands get the extra bit) — a uniform
     * ceil width would give trailing bands zero bits past ~bands/2, which
@@ -591,13 +533,30 @@ object Dedup {
     widths.scanLeft(0)(_ + _).zip(widths)
   }
 
+  /** SimHash near-duplicate pairs: docs whose 62-bit fingerprints differ in
+    * at most `maxHamming` bits. Candidate generation is the PIGEONHOLE band
+    * trick — split the fingerprint into `maxHamming + 1` bit-bands; any pair
+    * within the hamming budget matches at least one band EXACTLY — so the
+    * join is a narrow equality join on (band, bits), and recall is 1.0
+    * (unlike probabilistic LSH) AS LONG AS the hot-bucket valve does not
+    * bind: buckets above `maxBucket` are dropped, losing their pairs unless
+    * another band catches them. Pass `maxBucket = Int.MaxValue` for the
+    * strict pigeonhole guarantee — but a >10⁵-row bucket at h ≤ 3 means the
+    * corpus needs an exact/minhash dedup pass first, not a bigger join.
+    * Exact `bit_count(xor)` filter on the join output ([[bandedPairs]]).
+    *
+    * BUDGET ECONOMICS: on a homogeneous corpus every simhash bit is biased
+    * the same way, so band entropy comes from band WIDTH — 62/(h+1) bits.
+    * Measured on driver docs (5k): candidates = 4.7% of all pairs at h=2,
+    * 22% at h=3, ~100% at h=6. Keep the budget small (the Manku-et-al
+    * regime, h ≤ 3) or the equality join degenerates toward all-pairs.
+    * Output: (id_a, id_b, hamming), id_a < id_b. */
   def simhashHammingPairs(
       df: DataFrame,
       maxHamming: Int = 3,
       id: String = "doc_id",
       text: String = "text",
-      maxBucket: Int = DefaultMaxBucket,
-      eager: Boolean = true
+      maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
     require(maxHamming >= 0, "maxHamming must be non-negative")
     val bands = maxHamming + 1
@@ -605,41 +564,10 @@ object Dedup {
     val bandBuckets = array(bandLayout(TextHash.simhashBits, bands).map { case (off, bits) =>
       shiftright(col("simhash"), off).bitwiseAND((1L << bits) - 1)
     }: _*)
-    // Round-6 shape: the 8-byte fingerprint rides THROUGH the band
-    // self-join and the exact `bit_count(xor) <= h` re-rank runs INLINE on
-    // the join output — the Θ(Σ bucket²) candidate rows are filtered in
-    // the join stage and never cross an exchange; only the (tiny) set of
-    // true ≤h pairs reaches the distinct. The old shape distinct'ed ALL
-    // candidates (one full pair shuffle) and re-joined the signature frame
-    // twice to fetch fingerprints (which also forced persisting it).
-    // hamming is a function of the pair, so distinct-on-(pair, hamming)
-    // after the filter equals the old distinct-pairs-then-filter set.
-    val banded0 = sh.select(
-      col(id).as("_id"), col("simhash").as("_sh"),
-      posexplode(bandBuckets).as(Seq("_band", "_bb")))
-    val kept =
-      if (maxBucket == Int.MaxValue) banded0
-      else {
-        // same valve as bandedCandidates: window count on the join's own
-        // (band, bucket) clustering, observation on the ONE shared frame
-        // both join sides derive from (ReusedExchange keeps the lineage
-        // single-evaluated)
-        val counted = banded0.withColumn("_sz", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("_band"), col("_bb"))))
-        CapAudit
-          .observeDrops(counted, when(col("_sz") > maxBucket, 1L).otherwise(0L),
-            "banded_bucket_valve", "Dedup-band bucket sizes (raise maxBucket or re-band)")
-          .where(col("_sz") <= maxBucket).drop("_sz")
-      }
-    val out = kept.select(col("_id").as("id_a"), col("_sh").as("_sa"), col("_band"), col("_bb"))
-      .join(kept.select(col("_id").as("id_b"), col("_sh").as("_sb"), col("_band"), col("_bb")),
-        Seq("_band", "_bb"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("hamming", bit_count(col("_sa").bitwiseXOR(col("_sb"))))
+    bandedPairs(sh, col(id), Seq("sh" -> col("simhash")), bandBuckets, maxBucket)
+      .select(col("id_a"), col("id_b"), bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .where(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
       .distinct()
-    consumeEagerly(out, sh, eager)
   }
 
   /** (id, label) table → the (id, cluster_id, keep) output contract, shared
@@ -786,8 +714,8 @@ object Dedup {
     * Default path (`exact = false`): banded random-hyperplane LSH — one
     * portable codegen'd bucket per vector ([[graft.ann.Similarity.lshBucket]],
     * `bands × rowsPerBand` planes), candidates only from same-band-bucket
-    * collisions (narrow (id,id) pairs, like [[minhashLshPairs]]), exact
-    * cosine re-rank on the candidates. NO cross join ever materializes.
+    * collisions, exact cosine filter on the join output ([[bandedPairs]]).
+    * NO cross join ever materializes.
     * Recall < 1 by construction (pairs whose buckets never collide in any
     * band are missed); raise `bands` for recall, `rowsPerBand` for precision.
     *
@@ -815,26 +743,22 @@ object Dedup {
       rowsPerBand: Int = 7,
       maxBucket: Int = DefaultMaxBucket
   ): DataFrame = {
-    val a = emb.select(col(id).as("id_a"), col(vec).as("va"),
-      graft.ann.Similarity.norm(col(vec)).as("_na"))
-    val b = emb.select(col(id).as("id_b"), col(vec).as("vb"),
-      graft.ann.Similarity.norm(col(vec)).as("_nb"))
-    val paired =
-      if (exact) a.crossJoin(b).where(col("id_a") < col("id_b"))
-      else {
-        val planes = bands * rowsPerBand
-        val mask = (1L << rowsPerBand) - 1
-        val bucket = graft.ann.Similarity.lshBucket(col(vec), planes)
-        // band b's sub-bucket = bits [b·r, (b+1)·r) of the single bucket
-        val bandBuckets = array((0 until bands).map(bd =>
-          shiftright(bucket, bd * rowsPerBand).bitwiseAND(mask)): _*)
-        bandedCandidates(emb, col(id), bandBuckets, maxBucket)
-          .join(a, Seq("id_a"))
-          .join(b, Seq("id_b"))
-      }
-    paired
-      .withColumn("cosine", graft.ann.Similarity.dot(col("va"), col("vb")) / (col("_na") * col("_nb")))
+    val payload = Seq("v" -> col(vec), "n" -> graft.ann.Similarity.norm(col(vec)))
+    def scored(paired: DataFrame) = paired
+      .select(col("id_a"), col("id_b"),
+        (graft.ann.Similarity.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b"))).as("cosine"))
       .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
+    if (exact) {
+      def side(s: String) = emb.select(col(id).as(s"id_$s") +: payload.map { case (n, c) => c.as(s"${n}_$s") }: _*)
+      scored(side("a").crossJoin(side("b")).where(col("id_a") < col("id_b")))
+    } else {
+      val planes = bands * rowsPerBand
+      val mask = (1L << rowsPerBand) - 1
+      val bucket = graft.ann.Similarity.lshBucket(col(vec), planes)
+      // band b's sub-bucket = bits [b·r, (b+1)·r) of the single bucket
+      val bandBuckets = array((0 until bands).map(bd =>
+        shiftright(bucket, bd * rowsPerBand).bitwiseAND(mask)): _*)
+      scored(bandedPairs(emb, col(id), payload, bandBuckets, maxBucket)).distinct()
+    }
   }
 }

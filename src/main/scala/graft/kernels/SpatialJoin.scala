@@ -2,7 +2,6 @@ package graft.kernels
 
 import graft.dedup.CapAudit
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Large × large proximity join: all point pairs within `distM` metres —
@@ -114,17 +113,9 @@ object SpatialJoin {
       col(lonCol).cast("double").as("_lon_b"),
       floor(col(latCol) / cellLatDeg).cast("long").as("_cx"),
       floor(col(lonCol) / cellLonDeg).cast("long").as("_cy"))
-    val r =
-      if (maxCell == Int.MaxValue) r0
-      else {
-        // occupancy count on the SAME cell clustering the join shuffles on
-        val counted = r0.withColumn("_sz",
-          count(lit(1)).over(Window.partitionBy(col("_cx"), col("_cy"))))
-        CapAudit
-          .observeDrops(counted, when(col("_sz") > maxCell, 1L).otherwise(0L),
-            "spatial_cell_valve", "SpatialJoin cell occupancy (shrink cells or raise maxCell)")
-          .where(col("_sz") <= maxCell).drop("_sz")
-      }
+    // occupancy count on the SAME cell clustering the join shuffles on
+    val r = CapAudit.dropHotKeys(r0, Seq(col("_cx"), col("_cy")), maxCell,
+      "spatial_cell_valve", "SpatialJoin cell occupancy (shrink cells or raise maxCell)")
     val d = Geo.haversine(col("_lat_a"), col("_lon_a"), col("_lat_b"), col("_lon_b"))
     l.join(r, Seq("_cx", "_cy"))
       .where(d <= distM)
@@ -149,19 +140,10 @@ object SpatialJoin {
       lonCol: String = "lon",
       maxCell: Int = Int.MaxValue
   ): DataFrame = {
-    val base =
-      if (maxCell == Int.MaxValue) df
-      else {
-        require(maxCell >= 1, "maxCell must be >= 1")
-        val counted = df.withColumn("_sz",
-          count(lit(1)).over(Window.partitionBy(
-            floor(col(latCol) / cellLatDeg).cast("long"),
-            floor(col(lonCol) / cellLonDeg).cast("long"))))
-        CapAudit
-          .observeDrops(counted, when(col("_sz") > maxCell, 1L).otherwise(0L),
-            "spatial_cell_valve", "SpatialJoin cell occupancy (shrink cells or raise maxCell)")
-          .where(col("_sz") <= maxCell).drop("_sz")
-      }
+    require(maxCell >= 1, "maxCell must be >= 1")
+    val base = CapAudit.dropHotKeys(df,
+      Seq(floor(col(latCol) / cellLatDeg).cast("long"), floor(col(lonCol) / cellLonDeg).cast("long")),
+      maxCell, "spatial_cell_valve", "SpatialJoin cell occupancy (shrink cells or raise maxCell)")
     withinDistance(base, base, distM, cellLatDeg, cellLonDeg, idCol, latCol, lonCol)
       .where(col("id_a") < col("id_b"))
   }

@@ -4,8 +4,6 @@ import graft.core.Times
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
-import org.slf4j.LoggerFactory
 
 /** Streaming point-in-time enrichment: attach the most recent build-side
   * row (build.ts ≤ event.ts, [[graft.asof.AsOfJoin.backward]] semantics
@@ -24,32 +22,29 @@ import org.slf4j.LoggerFactory
   * Scale contract (VERDICT r4 #3 — this replaces the old unbounded
   * history array + raise-at-100k design):
   *
-  *  - '''keep-last-N with loud drop''': each entity's history is bounded
-  *    at `keepLastN` snapshots — the N most recent by (ts, buildOrder).
-  *    Older snapshots are DROPPED, and the drop is loud: [[enrichLatest]]
-  *    counts exactly how many build rows compaction evicted
-  *    ([[droppedBuilds]] — same one-agg audit shape as the spatial-join
-  *    cell valve) and WARN-logs it with the contract implication. The
-  *    semantics change under drops is precise and documented: an event is
-  *    enriched correctly whenever its ts is at-or-after its entity's
-  *    OLDEST KEPT snapshot; an event older than every kept snapshot gets
-  *    null (as if the entity had no history) instead of a dropped value.
-  *    Point-in-time feature tables hold recent snapshots per entity, not
-  *    the raw event firehose — histories deeper than `keepLastN` want the
-  *    BATCH banded as-of, and with no drops the output is bit-identical
-  *    to the unbounded formulation (StreamAsOfSpec asserts both).
+  *  - '''keep-last-N with a caller-run drop audit''': each entity's
+  *    history is bounded at `keepLastN` snapshots — the N most recent by
+  *    (ts, buildOrder). Older snapshots are DROPPED; [[droppedBuilds]]
+  *    counts exactly how many build rows compaction evicts (same one-agg
+  *    audit shape as the spatial-join cell valve), and a caller that cannot
+  *    rule drops out runs it and fails or warns. The semantics change under
+  *    drops is precise and documented: an event is enriched correctly
+  *    whenever its ts is at-or-after its entity's OLDEST KEPT snapshot; an
+  *    event older than every kept snapshot gets null (as if the entity had
+  *    no history) instead of a dropped value. Point-in-time feature tables
+  *    hold recent snapshots per entity, not the raw event firehose —
+  *    histories deeper than `keepLastN` want the BATCH banded as-of, and
+  *    with no drops the output is bit-identical to the unbounded
+  *    formulation (StreamAsOfSpec asserts both).
   *  - '''whale-safe compaction''': the keep-last-N is a
   *    `row_number ≤ N` rank-limit, which Catalyst rewrites to a map-side
   *    WindowGroupLimit — a whale entity ships O(N × tasks) rows through
   *    the compaction exchange, never its full history.
-  *  - '''materialized once''': [[enrichLatest]] persists
-  *    (MEMORY_AND_DISK) and eagerly materializes the compacted table
-  *    before the first micro-batch, so the static subplan is NOT
-  *    re-aggregated per micro-batch. The cache lives for the query;
-  *    callers that manage lifecycles explicitly (long-running apps,
-  *    repeated harness runs) use [[compactBuild]] + [[enrichCompacted]]
-  *    and persist/unpersist themselves — [[StreamDrive.asOfOverEvents]]
-  *    is the reference usage.
+  *  - '''the caller owns the cache''': neither function persists
+  *    anything. A streaming caller compacts once, persists and
+  *    materializes the compacted table before the first micro-batch (so
+  *    the static subplan is not re-aggregated per batch) and unpersists it
+  *    after — [[StreamDrive.asOfOverEvents]] is the reference usage.
   *  - '''bounded probe work''': the per-event candidate scan is
   *    O(keepLastN), not O(|history|).
   *
@@ -59,8 +54,6 @@ import org.slf4j.LoggerFactory
   * Output: stream columns + `asof_ts` + `valueCols` (null when no kept
   * build row at-or-before the event, or the event time is null). */
 object StreamAsOf {
-
-  private val log = LoggerFactory.getLogger(getClass)
 
   /** Compact the build side to ONE bounded row per entity:
     * `(entity, _builds array<struct<_m, _ord…, _p>>)` holding the
@@ -94,8 +87,8 @@ object StreamAsOf {
   }
 
   /** Exact count of build rows [[compactBuild]] evicts at `keepLastN` —
-    * one map-side-combined aggregate over the build side (the loud-drop
-    * audit [[enrichLatest]] runs at materialization time). */
+    * one map-side-combined aggregate over the build side: the caller's
+    * loud-drop audit (one Spark job). */
   def droppedBuilds(build: DataFrame, entity: String, ts: String, keepLastN: Int): Long = {
     require(keepLastN > 0, "keepLastN must be positive")
     val perEntity = build
@@ -142,71 +135,5 @@ object StreamAsOf {
         streamCols.map(col) ++
           Seq(when(matched, mTs).as("asof_ts")) ++
           valueCols.map(c => when(matched, best.getField("_p").getField(c)).as(c)): _*)
-  }
-
-  // enrichLatest's persisted-histories registry, keyed by the CANONICAL
-  // compacted-build plan (VERDICT r5 #6): concurrent enrichments over
-  // DIFFERENT builds each keep their own persisted frame — they no longer
-  // evict each other — while a re-enrichment of the SAME build replaces
-  // (and unpersists) only its own slot. Bounded at MaxHistories live
-  // frames (eldest evicted — recoverable recompute, same contract as the
-  // old single slot); long-running apps needing explicit lifecycle still
-  // use compactBuild + enrichCompacted.
-  private val MaxHistories = 8
-  /** Test hook: number of live persisted histories frames. */
-  private[graft] def registeredHistories: Int = histories.synchronized(histories.size())
-  private val histories = new java.util.LinkedHashMap[Int, DataFrame](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[Int, DataFrame]): Boolean =
-      if (size() > MaxHistories) {
-        try e.getValue.unpersist(blocking = false) catch { case _: Exception => () }
-        true
-      } else false
-  }
-  private def registerHistories(key: Int, frame: DataFrame): Unit =
-    histories.synchronized {
-      val prev = histories.put(key, frame)
-      if ((prev != null) && !(prev eq frame))
-        try prev.unpersist(blocking = false) catch { case _: Exception => () }
-    }
-
-  /** One-call form: compact → persist → materialize → loud drop audit →
-    * join. The compacted table is persisted until the NEXT enrichLatest
-    * call (which unpersists it) or session end — bounded at one live
-    * cache; callers needing explicit lifecycle (several concurrent
-    * enrichments, long-running apps) use [[compactBuild]] +
-    * [[enrichCompacted]] and persist/unpersist themselves.
-    * `auditDrops = false` skips the extra audit aggregate (e.g. when the
-    * caller already knows the history depth). */
-  def enrichLatest(
-      stream: DataFrame,
-      build: DataFrame,
-      entity: String,
-      ts: String,
-      valueCols: Seq[String],
-      buildOrder: Seq[String] = Nil,
-      toleranceSec: Double = -1.0,
-      keepLastN: Int = 64,
-      auditDrops: Boolean = true
-  ): DataFrame = {
-    val compacted = compactBuild(build, entity, ts, valueCols, buildOrder, keepLastN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    registerHistories(compacted.queryExecution.analyzed.canonicalized.hashCode(), compacted)
-    val nEntities = compacted.count() // materialize BEFORE the first micro-batch
-    if (auditDrops) {
-      val dropped = droppedBuilds(build, entity, ts, keepLastN)
-      if (dropped > 0L)
-        log.warn(
-          s"[graft] StreamAsOf keep-last-$keepLastN evicted $dropped build rows across " +
-            s"$nEntities entities — events older than an entity's oldest kept snapshot " +
-            s"enrich to null; raise keepLastN or use the batch banded as-of for deep lookback")
-    }
-    // the cache is materialized, so its stats are the REAL bytes: joins
-    // below the session broadcast threshold go out as a broadcast-hash
-    // join (map-only micro-batches) instead of a per-batch shuffle join
-    val sz = compacted.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcThreshold = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    val bc = bcThreshold > 0 && sz <= bcThreshold
-    enrichCompacted(stream, compacted, entity, ts, valueCols, toleranceSec,
-      broadcastHistories = bc)
   }
 }

@@ -165,8 +165,9 @@ object StreamDrive {
     * ([[StreamAsOf.compactBuild]]), persisted for the replay, and released
     * after — no per-micro-batch re-aggregation, explicit cache lifecycle.
     * keepLastN = 64 ≥ the deepest per-customer order history at every test
-    * SF ([[StreamAsOf.droppedBuilds]] = 0 there), so the output equals the
-    * unbounded as-of and the shared oracle stays exact. */
+    * SF ([[StreamAsOf.droppedBuilds]] = 0 there, pinned by StreamAsOfSpec),
+    * so the output equals the unbounded as-of and the shared oracle stays
+    * exact. */
   def asOfOverEvents(spark: SparkSession, sfDir: String): DataFrame = {
     val (probe, build) = SparkEntry.asOfSides(spark, sfDir)
     val histories = StreamAsOf.compactBuild(build, "user_id", "ts",

@@ -1,5 +1,6 @@
 package graft
 
+import graft.asof.{AsOfMerge, AsOfMergeStrategy}
 import graft.core.Tuning
 import graft.dedup.Dedup
 
@@ -66,5 +67,26 @@ class ConfHygieneSpec extends SparkSpec {
       pairs = Dedup.ngramJaccardPairs(docs, k = 2, threshold = 0.1)
     }
     assert(pairs.count() == 1)
+  }
+
+  test("AsOfMerge installs its strategy once and keeps the host's strategies in order") {
+    import spark.implicits._
+    object HostA extends org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = Nil
+    }
+    object HostB extends org.apache.spark.sql.execution.SparkStrategy {
+      def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = Nil
+    }
+    val probe = Seq((1L, 10L)).toDF("k", "ts")
+    val build = Seq((1L, 5L, 1.0)).toDF("k", "ts", "v")
+    val before = spark.experimental.extraStrategies
+    try {
+      spark.experimental.extraStrategies = Seq(HostA, HostB)
+      for (_ <- 1 to 3) {
+        AsOfMerge.backward(probe, build, "k", "ts", Seq("v"))
+        AsOfMerge.nearest(probe, build, "k", "ts", Seq("v"))
+      }
+      assert(spark.experimental.extraStrategies == Seq(HostA, HostB, AsOfMergeStrategy))
+    } finally spark.experimental.extraStrategies = before
   }
 }

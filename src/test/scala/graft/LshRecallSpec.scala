@@ -61,8 +61,7 @@ class LshRecallSpec extends SparkSpec {
     val foundByConfig = scala.collection.mutable.Map.empty[(Int, Int), Set[(Long, Long)]]
     for ((nh, b) <- configs) {
       val r = nh / b
-      val found = Dedup.minhashLshPairs(df, k = 3, numHashes = nh, bands = b,
-          estThreshold = 0.0, eager = false)
+      val found = Dedup.minhashLshPairs(df, k = 3, numHashes = nh, bands = b, estThreshold = 0.0)
         .select("id_a", "id_b").as[(Long, Long)].collect().toSet
       foundByConfig((nh, b)) = found
       for ((lo, hi) <- buckets) {

@@ -2,9 +2,11 @@ package graft
 
 import graft.asof.AsOfJoin
 import graft.streaming.StreamAsOf
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** StreamAsOf laws: the stateless bounded-history formulation is
+/** StreamAsOf laws, on the compactBuild + enrichCompacted path that
+  * `q_stream_asof` runs: the stateless bounded-history formulation is
   * exceptAll-equal to AsOfJoin.backward on the same (batch) frames — ties,
   * tolerance, null event times — and the keep-last-N compaction contract
   * holds: exact drop audit, arrays bounded at N, events at-or-after the
@@ -14,6 +16,12 @@ import org.apache.spark.sql.functions._
 class StreamAsOfSpec extends SparkSpec {
 
   import spark.implicits._
+
+  private def enrich(stream: DataFrame, build: DataFrame, valueCols: Seq[String],
+      buildOrder: Seq[String] = Nil, toleranceSec: Double = -1.0, keepLastN: Int = 64) =
+    StreamAsOf.enrichCompacted(stream,
+      StreamAsOf.compactBuild(build, "entity", "ts", valueCols, buildOrder, keepLastN),
+      "entity", "ts", valueCols, toleranceSec)
 
   private def probe = Seq(
     (1L, "u", "2024-01-01 00:00:00"),
@@ -36,8 +44,7 @@ class StreamAsOfSpec extends SparkSpec {
     .selectExpr("bid", "entity", "cast(ts_s as timestamp) as ts", "v")
 
   test("batch parity with AsOfJoin.backward, incl. ties, null ts, missing entity") {
-    val got = StreamAsOf.enrichLatest(probe, build, "entity", "ts",
-      Seq("bid", "v"), buildOrder = Seq("bid"))
+    val got = enrich(probe, build, Seq("bid", "v"), buildOrder = Seq("bid"))
     val want = AsOfJoin.backward(probe, build, "entity", "ts",
       Seq("bid", "v"), buildOrder = Seq("bid"))
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
@@ -48,8 +55,7 @@ class StreamAsOfSpec extends SparkSpec {
   }
 
   test("tolerance bounds the lookback like the batch operator") {
-    val got = StreamAsOf.enrichLatest(probe, build, "entity", "ts",
-      Seq("bid", "v"), buildOrder = Seq("bid"), toleranceSec = 3600.0)
+    val got = enrich(probe, build, Seq("bid", "v"), buildOrder = Seq("bid"), toleranceSec = 3600.0)
     val want = AsOfJoin.backward(probe, build, "entity", "ts",
       Seq("bid", "v"), toleranceSec = 3600.0, buildOrder = Seq("bid"))
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
@@ -77,37 +83,23 @@ class StreamAsOfSpec extends SparkSpec {
       (101L, "u", new java.sql.Timestamp(1700000000000L + 43L * 1000 + 500)), // mid-kept
       (102L, "u", new java.sql.Timestamp(1700000000000L + 5L * 1000)) // pre-kept → null
     ).toDF("event_id", "entity", "ts")
-    val got = StreamAsOf.enrichLatest(ev, bigBuild, "entity", "ts", Seq("bid"), keepLastN = 10)
+    val got = enrich(ev, bigBuild, Seq("bid"), keepLastN = 10)
       .collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(r.fieldIndex("bid"))) None else Some(r.getLong(r.fieldIndex("bid"))))).toMap
     assert(got(100L) == Some(50L) && got(101L) == Some(43L))
     assert(got(102L) == None, "an event older than every kept snapshot enriches to null")
     // no-drop parity: keepLastN ≥ history depth → bit-identical to the batch as-of
-    val full = StreamAsOf.enrichLatest(ev, bigBuild, "entity", "ts", Seq("bid"), keepLastN = 64)
+    val full = enrich(ev, bigBuild, Seq("bid"), keepLastN = 64)
     val want = AsOfJoin.backward(ev, bigBuild, "entity", "ts", Seq("bid"))
     assert(full.exceptAll(want).count() == 0 && want.exceptAll(full).count() == 0)
   }
 
-  test("concurrent enrichments keep their own persisted histories (VERDICT r5 #6)") {
-    val buildA = Seq((1L, "u", new java.sql.Timestamp(1700000000000L)))
-      .toDF("bid", "entity", "ts")
-    val buildB = Seq((2L, "v", new java.sql.Timestamp(1700000000000L)))
-      .toDF("vid", "entity", "ts")
-    val ev = Seq((9L, "u", new java.sql.Timestamp(1700000001000L)),
-      (10L, "v", new java.sql.Timestamp(1700000001000L))).toDF("event_id", "entity", "ts")
-    val before = StreamAsOf.registeredHistories
-    val outA = StreamAsOf.enrichLatest(ev, buildA, "entity", "ts", Seq("bid"))
-    val outB = StreamAsOf.enrichLatest(ev, buildB, "entity", "ts", Seq("vid"))
-    // the second enrichment must NOT have evicted the first's frame: both
-    // registry slots live, and both outputs still serve correct rows
-    assert(StreamAsOf.registeredHistories >= before + 2,
-      "distinct builds must occupy distinct registry slots")
-    assert(outA.where(col("event_id") === 9L && col("bid") === 1L).count() == 1)
-    assert(outB.where(col("event_id") === 10L && col("vid") === 2L).count() == 1)
-    // re-enriching the SAME build replaces its own slot only (no growth)
-    val afterTwo = StreamAsOf.registeredHistories
-    StreamAsOf.enrichLatest(ev, buildA, "entity", "ts", Seq("bid"))
-    assert(StreamAsOf.registeredHistories == afterTwo,
-      "same-build re-enrichment must reuse its slot, not grow the registry")
+  test("q_stream_asof's oracle premise: keep-last-64 drops no orders on sf0.001, sf0.01 and sf0.1") {
+    // the replay shares q_asof_orders' unbounded oracle, which holds only
+    // while compaction evicts nothing; no query path runs this audit
+    for (sf <- Seq("0.001", "0.01", "0.1")) {
+      val (_, orders) = SparkEntry.asOfSides(spark, sfDir(sf))
+      assert(StreamAsOf.droppedBuilds(orders, "user_id", "ts", keepLastN = 64) == 0L, s"sf$sf")
+    }
   }
 }
