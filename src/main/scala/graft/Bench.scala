@@ -24,7 +24,7 @@ object Bench {
     * kinematic features + gap sessionize) → consume EVERY feature (so
     * column pruning cannot drop any of the work). No exchange, no sort, no
     * window ([[graft.pipeline.FlagshipJob.consumeAll]], the one definition
-    * Bench, Explain and RunPipeline share). */
+    * Bench, PlanDump and RunPipeline share). */
   def flagship(spark: SparkSession, corpusPath: String): (Long, DataFrame) = {
     val corpus = spark.read.parquet(corpusPath)
     val out = graft.pipeline.FlagshipJob.consumeAll(corpus)

@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The driver session policy, defined once: `Bench`, `QTime`, `PlanDump`,
-  * `Verify` and `RunPipeline` all plan and run on [[session]]. (`Explain`
-  * and the test session keep their pinned `local[4]` sessions: they are
-  * plan gates.)
+  * `Verify` and `RunPipeline` all plan and run on [[session]]. (The
+  * tests keep a pinned `local[4]` session: they gate plan shapes.)
   *
   * Defaults come from the host: `SPARK_GRAFT_CPUS` sets the local cores,
   * else every core the JVM sees. */

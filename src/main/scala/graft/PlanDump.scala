@@ -1,14 +1,18 @@
 package graft
 
-/** Dump `.explain("formatted")` for named queries to files — the
-  * plans/r06/<query>_{before,after}.txt evidence the optimization rounds
-  * commit, planned on the shared [[Driver.session]]. Usage:
+/** The plan printer: writes `.explain("formatted")` of each named query
+  * to `<outDir>/<query>_<suffix>.txt` (the plans/r06 before/after evidence),
+  * planned on the shared [[Driver.session]]. Usage:
   *   sbt "runMain graft.PlanDump <outDir> <suffix> <query1> <query2> ..."
   * Special names: `flagship` (FlagshipJob.consumeAll on Bench's default
   * corpus, generated if missing), `flagship_window_reference`,
   * `flagship_regroup`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.length < 3) {
+      System.err.println("usage: PlanDump <outDir> <suffix> <query1> [query2 ...]")
+      sys.exit(2)
+    }
     val outDir = args(0)
     val suffix = args(1)
     val names = args.drop(2).toSeq

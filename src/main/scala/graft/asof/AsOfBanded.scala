@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
   * rows, not data-sized).
   *
   * Cost: one extra narrow aggregate + window over band summaries and ≤1
-  * replicated build row per (entity, probe-band) per needed direction — the
-  * lag-k overlap trick `withKinematicsSalted` uses, applied to the join.
+  * replicated build row per (entity, probe-band) per needed direction — a
+  * lag-k overlap, applied to the join.
   * Semantics caveat (documented, spec-pinned): event times with no
   * TIMESTAMP IMAGE — null; NaN/±Inf doubles; numeric keys whose seconds
   * value overflows the timestamp-representable range (|ts| ≳ 3e11 s) — are

@@ -61,7 +61,7 @@ object TokenAdapter {
 
 /** Deterministic synthetic sequence corpus (seed=42, no external data) per
   * FIXTURES.md §4: heavy-tailed lengths (a few entities at ~100× median to
-  * exercise skew salting), xxhash-PRNG tokens. Pure `spark.range` +
+  * exercise whale-doc skew), xxhash-PRNG tokens. Pure `spark.range` +
   * expressions — generated distributed, never on the driver.
   */
 object SyntheticCorpus {

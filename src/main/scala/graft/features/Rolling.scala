@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * row-bounded sliding windows over the same window spec (one WindowExec,
   * buffer bounded by k — no whole-partition frames); every aggregate here
   * is whole-stage-friendly and the projection prunes to (keys, value)
-  * before the exchange. Skewed whale entities: same banding remedy as the
-  * kinematic windows ([[Kinematic.withKinematicsSalted]]). */
+  * before the exchange. A whale entity still sorts in one task: the
+  * window partitions by the entity alone. */
 object Rolling {
 
   /** Adds `roll_n`, `roll_min`, `roll_max`, `roll_mean`, `roll_rate_hz`
@@ -39,7 +39,7 @@ object Rolling {
     val m = Times.micros(s.tsCol)
     // every window expression in ONE projection → the optimizer plans a
     // single WindowExec (chained withColumns re-derive the count/first
-    // frames in a second Window node — Explain-gated against)
+    // frames in a second Window node — PlanShapeSpec gates against)
     val windowed = df.select(col("*"),
       count(v).over(w).as("roll_n"),
       min(v).over(w).as("roll_min"),

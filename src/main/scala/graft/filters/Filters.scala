@@ -34,12 +34,6 @@ object Filters {
     out
   }
 
-  /** Lazy variant of [[byTrajId]] for composed pipelines that cannot afford
-    * the per-call existence job: same predicate, no probe — an absent id
-    * yields an empty frame instead of raising. */
-  def byTrajIdLazy(df: DataFrame, s: TrajSchema, id: String): DataFrame =
-    df.where(s.idCol === id)
-
   /** F4 — bounding-box predicate; `inside=false` keeps the complement
     * (filters.py:128-155). */
   def byBoundingBox(df: DataFrame, s: TrajSchema, box: (Double, Double, Double, Double), inside: Boolean = true): DataFrame = {

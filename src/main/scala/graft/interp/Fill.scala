@@ -34,9 +34,8 @@ import org.apache.spark.sql.functions._
   * sort. Cumulative `last(ignoreNulls)` frames are O(1) state per row
   * (Spark's UnboundedPrecedingWindowFunctionFrame), no per-group
   * buffering beyond the partition spill already inherent to window sorts;
-  * whale entities band-split exactly like the kinematic windows (same
-  * key, same fix: [[graft.features.Kinematic.withKinematicsSalted]]'s
-  * banding applies if profiling ever demands it). */
+  * a whale entity still sorts in one task, as in every entity-partitioned
+  * window. */
 object Fill {
 
   private def carried(

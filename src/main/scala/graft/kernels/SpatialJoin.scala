@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * 3×3 cell neighborhood (a fixed 9× fan-out — replicate the smaller
   * side), the right side keeps one row per point, and an EQUI-join on the
   * cell key clusters candidates — Catalyst plans a plain shuffled hash /
-  * sort-merge join, never a cross product (Explain-gated). The exact
+  * sort-merge join, never a cross product (spec-gated). The exact
   * haversine then filters candidates; a pair survives in EXACTLY one cell
   * (the right point's own), so no post-dedup is needed.
   *

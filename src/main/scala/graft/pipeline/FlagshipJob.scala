@@ -6,7 +6,7 @@ import graft.session.Sessionize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** THE flagship job, defined once (Bench times it, Explain audits its plan,
+/** THE flagship job, defined once (Bench times it, specs audit its plan,
   * RunPipeline ships it): tokenized sequences → 8 kinematic features → gap
   * sessionize → consume-all per-doc vector (every feature summed so column
   * pruning cannot drop any of the work).
@@ -41,7 +41,7 @@ object FlagshipJob {
     * preserves the partitioning so the window plans no second exchange) →
     * explode → one sort → fused 8-feature window chain → gap sessionize →
     * consume-all agg. Semantics reference for the parity specs and the
-    * Explain plan gate. */
+    * plan-shape spec. */
   def windowReferenceConsumeAll(corpus: DataFrame): DataFrame = {
     val (grid, ts) = TokenAdapter.explodeTokens(corpus.repartition(col("doc_id")))
     val ses = Sessionize.byGap(Kinematic.withKinematics(grid, ts), ts, GapSeconds)

@@ -132,7 +132,7 @@ object Sampling {
     }
     if (thresholds.length <= MaxCaseStrata) {
       // few strata: inline CASE chain — the scan stays filter-only (no join,
-      // no exchange; the Explain gate asserts this shape)
+      // no exchange; PlanShapeSpec asserts this shape)
       val threshold = thresholds.foldLeft(lit(0L): Column) {
         case (acc, (stratum, t)) =>
           when(s <=> stratum.map(lit).getOrElse(lit(null)), lit(t)).otherwise(acc)
@@ -172,7 +172,7 @@ object Sampling {
     * per-MAP-PARTITION group-limit BEFORE the exchange (each task forwards
     * at most `n` rows per key it sees), so a whale domain ships
     * O(n × tasks) rows through the shuffle, never its full row set. The
-    * Explain gate asserts the map-side limit is present. */
+    * plan spec asserts the map-side limit is present. */
   def capPerKey(df: DataFrame, keyCol: String, n: Int, priority: Seq[Column]): DataFrame = {
     require(n >= 1, s"per-key cap must be >= 1, got $n")
     require(priority.nonEmpty, "capPerKey needs an explicit priority order")

@@ -90,7 +90,7 @@ class AsOfMergeSpec extends SparkSpec {
       toleranceSec = 1200.0, buildOrder = Seq("bid"))
     assertSame(v1t, v2t)
     // driver shape
-    val dir = "/root/testdata/sf0.001"
+    val dir = sfDir("0.001")
     val probe = spark.read.parquet(s"$dir/events.parquet").select(col("user_id"), col("ts"), col("event_id"))
     val build = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"), col("o_orderkey"), col("o_totalprice"))
@@ -134,7 +134,7 @@ class AsOfMergeSpec extends SparkSpec {
   }
 
   test("merge exec ≡ window formulation on events×orders (driver shape)") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sfDir("0.001")
     val probe = spark.read.parquet(s"$dir/events.parquet").select(col("user_id"), col("ts"), col("event_id"))
     val build = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"), col("o_orderkey"), col("o_totalprice"))
@@ -158,7 +158,7 @@ class AsOfMergeSpec extends SparkSpec {
   }
 
   test("merge exec plans co-partitioned children, no union sort") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sfDir("0.001")
     val probe = spark.read.parquet(s"$dir/events.parquet").select(col("user_id"), col("ts"), col("event_id"))
     val build = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey").as("user_id"), col("o_orderdate").as("ts"), col("o_orderkey"))
@@ -167,6 +167,14 @@ class AsOfMergeSpec extends SparkSpec {
     assert(plan.contains("AsOfMerge"))
     assert(!plan.contains("Union"), "v2 must not union the sides")
     assert(!plan.contains("Window"), "v2 must not use window state")
+    // the other exec directions plan the same merge shape
+    for ((direction, df) <- Seq(
+        "forward" -> AsOfMerge.forward(probe, build, "user_id", "ts", Seq("o_orderkey"), buildOrder = Seq("o_orderkey")),
+        "nearest" -> AsOfMerge.nearest(probe, build, "user_id", "ts", Seq("o_orderkey"), buildOrder = Seq("o_orderkey")))) {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("AsOfMerge"), s"asof $direction exec: AsOfMerge planned\n$p")
+      assert(!p.contains("Union") && !p.contains("Window"), s"asof $direction exec: no union, no window\n$p")
+    }
   }
 
   test("NaN/Inf double event times never match under tolerance or nearest (≡ v1 null-cast)") {

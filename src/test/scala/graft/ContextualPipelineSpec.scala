@@ -24,6 +24,33 @@ class ContextualSpec extends SparkSpec {
     assert(in.map(r => (r.getDouble(0), r.getDouble(1))) == Set((5.0, 5.0), (9.99, 9.99)))
   }
 
+  test("C3 horizontal edges build no crossing term; membership equals the every-edge sum") {
+    val rect = Seq((0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0))
+    val house = Seq((0.0, 0.0), (0.0, 10.0), (6.0, 10.0), (9.0, 5.0), (6.0, 0.0))
+    def pip(p: Seq[(Double, Double)]) = Contextual.pointInPolygon($"lat", $"lon", p)
+    // inside, outside, and exactly on the latitude of an edge or a vertex
+    val pts = Seq((5.0, 5.0), (15.0, 5.0), (-1.0, 3.0), (0.0, 5.0), (10.0, 5.0), (0.0, -3.0),
+      (10.0, 20.0), (6.0, 5.0), (6.0, 12.0), (9.0, 5.0), (9.0, 4.0), (3.0, 10.0))
+      .toDF("lat", "lon")
+    val caseWhens = pts.select(pip(rect)).queryExecution.analyzed.expressions
+      .flatMap(_.collect { case w: org.apache.spark.sql.catalyst.expressions.CaseWhen => w })
+    assert(caseWhens.length == 2, s"a rectangle has 2 crossable edges, built ${caseWhens.length} terms")
+    // the same crossing test with one term per edge, horizontal edges included
+    def everyEdge(p: Seq[(Double, Double)], lat: Double, lon: Double): Boolean =
+      p.indices.count { i =>
+        val (yi, xi) = p(i)
+        val (yj, xj) = p((i + 1) % p.length)
+        (yi > lat) != (yj > lat) && lon < (xj - xi) * (lat - yi) / (yj - yi) + xi
+      } % 2 == 1
+    for ((name, poly) <- Seq("rect" -> rect, "house" -> house)) {
+      pts.select($"lat", $"lon", pip(poly)).as[(Double, Double, Boolean)].collect().foreach {
+        case (lat, lon, in) => assert(in == everyEdge(poly, lat, lon), s"$name at ($lat, $lon)")
+      }
+    }
+    val flat = Seq((5.0, 0.0), (5.0, 10.0))
+    assert(pts.select(pip(flat)).collect().forall(!_.getBoolean(0)), "a zero-area polygon contains nothing")
+  }
+
   test("C4 intersect returns shared in-polygon coordinates") {
     val poly = Seq((39.0, 116.0), (41.0, 116.0), (41.0, 117.0), (39.0, 117.0))
     val out = Contextual.intersectInsidePolygon(

@@ -12,7 +12,7 @@ class CurationSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private def docs = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
 
   // ---- mixture sampling ----
 

@@ -158,11 +158,11 @@ class EwmaCapSpec extends SparkSpec {
     val plan = Sampling.capPerKey(docs, "src", 5, Seq(col("sz").desc, col("id").asc))
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), s"rank-limit rewrite missing:\n$plan")
-    // Partial mode group limit must sit below the exchange (map-side)
-    val idxLimit = plan.indexOf("WindowGroupLimit")
+    // the plan prints root first: the reduce-side limit above the
+    // exchange, the map-side (partial) one below it
     val idxEx = plan.indexOf("Exchange")
-    assert(idxEx >= 0 && plan.indexOf("WindowGroupLimit", idxEx) >= 0,
-      "expected a group limit on the reduce side too")
-    assert(idxLimit >= 0, "map-side group limit present")
+    assert(idxEx >= 0 && plan.indexOf("WindowGroupLimit") < idxEx &&
+      plan.indexOf("WindowGroupLimit", idxEx) > idxEx,
+      s"cap: group limit on BOTH sides of the exchange\n$plan")
   }
 }

@@ -28,7 +28,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("injected functions stay inside whole-stage codegen") {
     // non-local source: a local relation would be constant-folded away
-    SparkEntry.traj(spark, "/root/testdata/sf0.001").createOrReplaceTempView("pts2")
+    SparkEntry.traj(spark, sfDir("0.001")).createOrReplaceTempView("pts2")
     val plan = spark.sql("SELECT haversine_m(lat, lon, 39.0, 116.0) FROM pts2")
       .queryExecution.executedPlan
     val hasCodegen = plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])

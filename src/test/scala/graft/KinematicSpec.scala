@@ -1,6 +1,5 @@
 package graft
 
-import graft.core.{SyntheticCorpus, TokenAdapter}
 import graft.features.Kinematic
 import graft.kernels.Geo
 import org.apache.spark.sql.functions._
@@ -78,17 +77,6 @@ class KinematicSpec extends SparkSpec {
     assert(got == inline && got.size == 1)
     assertClose(Some(got.head.getDouble(1)), Some(dist.flatten.sum))
     assert(Kinematic.distanceTravelledByDate(fixture, S, "1", "2008-10-24").count() == 0)
-  }
-
-  test("salted/banded kinematics EXACTLY equals the unsalted plan") {
-    val corpus = SyntheticCorpus.generate(spark, nDocs = 40, medianLen = 50, skewEvery = 10, skewFactor = 8)
-    val (grid, ts) = TokenAdapter.explodeTokens(corpus)
-    val plain = Kinematic.withKinematics(grid, ts)
-    val salted = Kinematic.withKinematicsSalted(grid, ts, "pos", bandRows = 64, overlap = 3)
-    val cols = Seq("doc_id", "pos") ++ Kinematic.AllFeatures
-    val a = plain.select(cols.map(col): _*)
-    val b = salted.select(cols.map(col): _*)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
   test("Geo.boundingBoxByRadius matches the reference golden vector") {

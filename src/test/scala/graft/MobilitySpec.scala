@@ -49,5 +49,6 @@ class MobilitySpec extends SparkSpec {
     // would show two whole-partition windows; exactly two windows exist —
     // centroid (over points, unavoidable) and normalizer (over cells)
     assert("\\bWindow \\[".r.findAllIn(plan).length == 2, s"unexpected windows:\n$plan")
+    assert(plan.contains("partial_count"), s"mobility: map-side partial aggregation\n$plan")
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * while keeping the broadcast-join plan (corpus side untouched). */
 class MultiProbeSpec extends SparkSpec {
 
-  private val Sf = "/root/testdata/sf0.001"
+  private val Sf = sfDir("0.001")
   private val K = 10
 
   private def emb = spark.read.parquet(s"$Sf/embeddings.parquet")

@@ -39,6 +39,8 @@ class ProfileSpec extends SparkSpec {
     val approxPlan = Profile.profile(df, Seq("id", "s", "v"))
       .queryExecution.executedPlan.toString
     assert(!approxPlan.contains("Expand"), s"approx must be single-pass:\n$approxPlan")
+    assert(approxPlan.contains("partial_count"), s"profile: map-side partial aggregation\n$approxPlan")
+    assert("Exchange".r.findAllIn(approxPlan).length == 1, s"profile: one exchange\n$approxPlan")
     val exactPlan = Profile.profile(df, Seq("id", "s", "v"), exact = true)
       .queryExecution.executedPlan.toString
     assert(exactPlan.contains("Expand"), "exact multi-distinct goes through Expand")

@@ -89,5 +89,12 @@ class ResampleJsonSpec extends SparkSpec {
     val plan = Json.extract(j, "props", Seq("k" -> LongType))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.contains("Join"))
+    // over a scan (the local fixture above folds into a LocalRelation), the
+    // optimizer prunes the parse schema to the one requested field
+    val scanned = Json.extract(
+      SparkEntry.events(spark, sfDir("0.001")).select(col("event_id"), col("props")),
+      "props", Seq("k" -> LongType), prefix = "props_").queryExecution.optimizedPlan.toString
+    assert(scanned.contains("from_json(StructField(k,LongType,true)"),
+      s"json: parse schema pruned to the requested field\n$scanned")
   }
 }

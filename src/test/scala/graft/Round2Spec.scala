@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class LshBucketParitySpec extends SparkSpec {
 
   test("LshBucketExpr == HOF formulation bit-for-bit on driver embeddings") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val e = spark.read.parquet(s"${sfDir("0.001")}/embeddings.parquet")
     Seq(2, 6, 16).foreach { planes =>
       val bad = e.select(
         (Similarity.lshBucket(col("embedding"), planes) <=>
@@ -37,7 +37,7 @@ class LshBucketParitySpec extends SparkSpec {
   }
 
   test("banded near-dup is a subset of brute force with full-pair precision") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val e = spark.read.parquet(s"${sfDir("0.001")}/embeddings.parquet")
     val approx = Dedup.embeddingNearDupPairs(e, threshold = 0.2, bands = 8, rowsPerBand = 2)
     val brute = Dedup.embeddingNearDupPairs(e, threshold = 0.2, exact = true)
     // every banded pair is a true pair (exact re-rank ⇒ no false positives)
@@ -51,7 +51,7 @@ class SimhashPairsSpec extends SparkSpec {
 
   test("pigeonhole banding finds every pair within the hamming budget (recall 1.0)") {
     import spark.implicits._
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val docs = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
     val banded = Dedup.simhashHammingPairs(docs, maxHamming = 8)
     // brute-force reference over all simhash pairs
     val sh = Dedup.simhash(docs)
@@ -174,18 +174,12 @@ class FilterRaiseSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no-such-entity"))
   }
-
-  test("F2 lazy variant filters without the existence probe") {
-    assert(Filters.byTrajIdLazy(fixture, S, "1").count() == 5)
-    // absent id: empty frame, no raise, no eager job at construction
-    assert(Filters.byTrajIdLazy(fixture, S, "no-such-entity").isEmpty)
-  }
 }
 
 class VisitedPoiPathsSpec extends SparkSpec {
 
   test("kernel path agrees row-for-row with a semi∪anti join reference") {
-    val t = SparkEntry.traj(spark, "/root/testdata/sf0.001")
+    val t = SparkEntry.traj(spark, sfDir("0.001"))
     val sur = t.where(col("traj_id") === "3")
       .select(col("lat"), col("lon"), (col("lat") * 1000.0).as("dist_poi"))
     val inline = graft.features.Contextual.visitedPoi(t, SparkEntry.S, sur, "dist_poi", 5000.0)

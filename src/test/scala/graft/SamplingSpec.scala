@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Deterministic sampling laws + contiguous-packing invariants. */
 class SamplingSpec extends SparkSpec {
 
-  private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+  private def docs = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
 
   test("hash sampling is repeatable, monotone in fraction, and roughly proportional") {
     val s10a = Sampling.byHash(docs, 0.1, "doc_id").select("doc_id")

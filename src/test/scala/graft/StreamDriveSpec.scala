@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * the DuckDB oracle checks for q_stream_dedup / q_stream_ses). */
 class StreamDriveSpec extends SparkSpec {
 
-  private val Sf = "/root/testdata/sf0.001"
+  private val Sf = sfDir("0.001")
 
   test("replayed streaming dedup == distinct texts of the documents table") {
     val got = StreamDrive.dedupOverDocuments(spark, Sf)

@@ -12,7 +12,7 @@ class TextKernelParitySpec extends SparkSpec {
   test("polyHash / tokenHashes / shingles / minhash kernels == HOF on driver docs") {
     import spark.implicits._
     val extra = Seq("", "  ", "one", "one two", " padded  words\t here ").toDF("text")
-    val t = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val t = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
       .select(col("text")).unionByName(extra)
 
     val cmp = t.select(
@@ -31,7 +31,7 @@ class TextKernelParitySpec extends SparkSpec {
     import spark.implicits._
     val extra = Seq("", "  ", "one", "one two", "x x x x", "a b a b c",
       " padded  words\t here ", null.asInstanceOf[String]).toDF("text")
-    val t = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val t = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
       .select(col("text")).unionByName(extra)
     // both formulations over the SAME rows (null text included — the HOF
     // falls through its WHEN branches to 0.0, the kernel path coalesces)

@@ -72,8 +72,10 @@ class TransitionPairSpec extends SparkSpec {
   test("pairCounts plans one map-side-combined aggregate and TakeOrdered, no global sort") {
     val docs = (1 to 50).map(i => (i.toLong, Seq.fill(5)((i % 7).toLong))).toDF("doc_id", "tokens")
     val plan = TokenStats.pairCounts(docs, topK = 10).queryExecution.executedPlan.toString
-    assert(plan.contains("partial_count") || plan.contains("Partial"), "map-side combine")
-    assert(plan.contains("TakeOrderedAndProject"), s"topK must plan TakeOrdered:\n$plan")
+    assert(plan.contains("partial_count"), s"pairs: map-side partial count\n$plan")
+    assert(plan.contains("TakeOrderedAndProject") && !"\\bSort \\[".r.findAllIn(plan).hasNext,
+      s"pairs: TakeOrderedAndProject, no global Sort\n$plan")
     assert(!plan.contains("Join"), "no join in the pair explode")
+    assert("Exchange".r.findAllIn(plan).length == 1, s"pairs: one exchange\n$plan")
   }
 }
