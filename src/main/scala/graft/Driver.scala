@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The driver session policy, defined once: `Bench`, `QTime`, `PlanDump`,
@@ -24,6 +26,9 @@ object Driver {
   /** The dataset directory the mains read when none is given. */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** The dataset directory of scale factor `sf` ("0.001"): a sibling of [[sfDir]]. */
+  def sfDir(sf: String): String = java.nio.file.Paths.get(sfDir).resolveSibling(s"sf$sf").toString
+
   /** Local cores: `SPARK_GRAFT_CPUS` from `env`, else
     * `Runtime.availableProcessors`. A value that is not a positive integer
     * fails, naming the variable. */
@@ -44,11 +49,12 @@ object Driver {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
-  /** The shared driver session on [[cores]] local cores, logging at WARN. */
+  /** The shared driver session on [[cores]] local cores, logging at WARN from its
+    * first line: Spark's INFO log defaults are installed, then lowered, before the builder. */
   def session(): SparkSession = {
-    val spark = conf(cores()).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
+    new org.apache.spark.internal.Logging { initializeLogIfNecessary(isInterpreter = false) }
+    Configurator.setRootLevel(Level.WARN)
+    conf(cores()).foldLeft(SparkSession.builder()) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

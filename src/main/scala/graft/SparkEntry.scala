@@ -10,6 +10,7 @@ import graft.session.Sessionize
 import graft.stats.Stats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One registered query: the Spark builder over an sf dir and the DuckDB
   * SQL over the same parquet tables that its output must match. */
@@ -40,12 +41,22 @@ object SparkEntry {
 
   val S: TrajSchema = TrajSchema(orderCols = Seq("event_id"))
 
-  /** Every testdata table read: `<dir>/<name>.parquet`, after the engine's
-    * session policy ([[graft.core.Tuning]]). */
+  /** Every testdata table read: `<dir>/<name>.parquet` with its declared
+    * [[TableSchemas]] entry (inference would launch a footer-merging job per
+    * read; an undeclared name fails), after the engine's session policy. */
   def table(sp: SparkSession, dir: String, name: String): DataFrame = {
+    require(TableSchemas.contains(name), s"no declared schema for testdata table '$name'")
     graft.core.Tuning.ensureAdaptiveCachedPlans(sp)
-    sp.read.parquet(s"$dir/$name.parquet")
+    sp.read.schema(TableSchemas(name)).parquet(s"$dir/$name.parquet")
   }
+
+  /** The schema Spark infers for each testdata table the engine reads, at every scale factor. */
+  private[graft] val TableSchemas: Map[String, StructType] = Map(
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events" -> "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, props STRING",
+    "orders" -> "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+  ).map { case (n, ddl) => n -> StructType.fromDDL(ddl) }
 
   def events(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "events")
 
@@ -150,7 +161,7 @@ object SparkEntry {
 
   /** Flagship: full fused kinematic feature vector (K11) on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
-    val df = kin(spark, "/root/testdata/sf0.001")
+    val df = kin(spark, Driver.sfDir("0.001"))
     Canonical.cluster(df, S, 8)
   }
 

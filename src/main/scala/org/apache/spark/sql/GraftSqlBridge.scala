@@ -10,6 +10,10 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A session sharing `spark`'s context and cache, with a copy of its SQL conf. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
   /** Column from a raw catalyst Expression (for custom codegen'd
     * expressions used through the DataFrame API). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =

@@ -161,11 +161,17 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("decontamination broadcasts the benchmark shingles") {
-    val decon = graft.dedup.Dedup.contaminatedDocs(
-      docs.where(col("doc_id") >= 20), docs.where(col("doc_id") < 20))
-    val deconPlan = planOf(decon)
-    assertPlan(decon, "decontam: benchmark side broadcast")(deconPlan.contains("BroadcastHashJoin"))
-    assertPlan(decon, "decontam: no sort-merge join")(!deconPlan.contains("SortMergeJoin"))
+    // size-based broadcasts off: only the operator's own hint can broadcast
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getAll.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val decon = graft.dedup.Dedup.contaminatedDocs(
+        docs.where(col("doc_id") >= 20), docs.where(col("doc_id") < 20))
+      val deconPlan = planOf(decon)
+      assertPlan(decon, "decontam: benchmark side broadcast")(deconPlan.contains("BroadcastHashJoin"))
+      assertPlan(decon, "decontam: no sort-merge join")(!deconPlan.contains("SortMergeJoin"))
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("hash sampling: filter-only plan") {

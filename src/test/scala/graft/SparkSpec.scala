@@ -39,10 +39,8 @@ abstract class SparkSpec extends AnyFunSuite {
 
   val S: TrajSchema = TrajSchema()
 
-  /** The testdata directory of scale factor `sf` ("0.001", "0.01", "0.1"):
-    * a sibling of [[Driver.sfDir]]. */
-  def sfDir(sf: String): String =
-    java.nio.file.Paths.get(Driver.sfDir).resolveSibling(s"sf$sf").toString
+  /** The testdata directory of scale factor `sf`: [[Driver.sfDir]]`(sf)`. */
+  def sfDir(sf: String): String = Driver.sfDir(sf)
 
   def col1(df: DataFrame, c: String): Seq[Option[Double]] =
     df.orderBy("traj_id", "ts").select(c).collect().toSeq.map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
