@@ -46,6 +46,10 @@ object Driver {
     "spark.sql.shuffle.partitions" -> (4 * cores).toString,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> ObjHashFallback.toString,
     "spark.sql.windowExec.buffer.in.memory.threshold" -> WindowBuffer.toString,
+    // lets AQE coalesce the stages of persisted plans; the engine's one
+    // persisted plan, `Dedup.dupClusters`' distributed path, reads ~28%
+    // faster warm at sf0.1 on 4 cores (README, "Host sessions")
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

@@ -43,10 +43,9 @@ object SparkEntry {
 
   /** Every testdata table read: `<dir>/<name>.parquet` with its declared
     * [[TableSchemas]] entry (inference would launch a footer-merging job per
-    * read; an undeclared name fails), after the engine's session policy. */
+    * read; an undeclared name fails). */
   def table(sp: SparkSession, dir: String, name: String): DataFrame = {
     require(TableSchemas.contains(name), s"no declared schema for testdata table '$name'")
-    graft.core.Tuning.ensureAdaptiveCachedPlans(sp)
     sp.read.schema(TableSchemas(name)).parquet(s"$dir/$name.parquet")
   }
 

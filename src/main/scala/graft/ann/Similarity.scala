@@ -181,7 +181,9 @@ object Similarity {
     * prefix). Standard quantizer practice — IVF centroids need a sample, the
     * full corpus is assigned map-side afterward — and it caps any one
     * aggregation buffer at ~trainCap/nCentroids vectors no matter the corpus
-    * size. Corpora ≤ trainCap (every test SF) train on everything, so the
+    * size. The sample is collected once into a local relation (trainCap
+    * vectors on the driver), so the corpus is read once and nothing is
+    * cached. Corpora ≤ trainCap (every test SF) train on everything, so the
     * SQL oracle is unchanged. */
   def ivfCentroids(
       corpus: DataFrame,
@@ -195,14 +197,15 @@ object Similarity {
     val P = graft.functions.TextHash.P
     val seedRank = graft.functions.TextHash.affine(pmod(col(corpusId).cast("long"), lit(P)), 0)
     require(trainCap >= nCentroids, "trainCap must cover the seed count")
-    // ONE TakeOrdered over the corpus, cached: the seeds, every Lloyd
-    // assignment, and the convergence loop all reread this ≤trainCap-row set
-    val train = corpus
+    // ONE TakeOrdered over the corpus, collected into a local relation: the
+    // seeds and every Lloyd assignment reread this ≤trainCap-row set
+    val sample = corpus
       .select(col(corpusId), col(vec))
       .withColumn("_r", seedRank)
       .orderBy(col("_r"), col(corpusId))
       .limit(trainCap)
-      .cache()
+    val spark = corpus.sparkSession
+    val train = spark.createDataFrame(java.util.Arrays.asList(sample.collect(): _*), sample.schema)
     var cents = train
       .select(col(corpusId), asDouble.as("centroid"), col("_r"))
       .orderBy(col("_r"), col(corpusId))
@@ -233,12 +236,9 @@ object Similarity {
         .agg(sums.as("_sums"), count(lit(1)).as("_n"))
         .select(col("centroid_id"), transform(col("_sums"), s => s / col("_n")).as("centroid"))
     }
-    // materialize the ≤nCentroids rows to a local relation so the training
-    // cache can be released and downstream plans carry no Lloyd lineage
-    val local = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(cents.collect(): _*), cents.schema)
-    train.unpersist()
-    local
+    // materialize the ≤nCentroids rows to a local relation so downstream
+    // plans carry no Lloyd lineage
+    spark.createDataFrame(java.util.Arrays.asList(cents.collect(): _*), cents.schema)
   }
 
   /** Nearest centroid per corpus row (broadcast argmin, deterministic

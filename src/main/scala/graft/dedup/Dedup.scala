@@ -588,18 +588,21 @@ object Dedup {
     *
     * Two physical paths with the IDENTICAL fixpoint (DupClustersSpec
     * asserts equality):
-    *   - LONG ids and pair sets ≤ `localLimit` (pairs is cached so the
-    *     size probe and the collect run its pipeline once): driver-side
-    *     union-find then one broadcast-join of the label table — near-dup
-    *     candidate sets are tiny relative to the corpus, and the iterative
-    *     path's per-round job overhead would dominate (9 s → ~1.7 s at
-    *     sf0.1);
+    *   - LONG ids and pair sets ≤ `localLimit` (one probe collect fetches
+    *     the pairs): driver-side union-find then one broadcast-join of the
+    *     label table — near-dup candidate sets are tiny relative to the
+    *     corpus, and the iterative path's per-round job overhead would
+    *     dominate (9 s → ~1.7 s at sf0.1);
     *   - larger sets or non-long ids: distributed min-label propagation
     *     (one narrow shuffle per round, O(component diameter) rounds;
     *     `maxIters` is a stall guard, convergence is REQUIRED so the result
     *     is the true fixpoint the oracle's transitive closure computes).
-    *     The returned frame's lineage holds the final label cache
-    *     (evictable). */
+    *     This is the engine's one persisted plan: each round's labels feed
+    *     the next round's join and its change count, so without a cache
+    *     round i would recompute rounds 1..i, and pairs that did not fit
+    *     the local path cannot be collected instead. The pairs and edges
+    *     are released on return; the returned frame's lineage holds the
+    *     final label cache (evictable). */
   def dupClusters(
       pairs: DataFrame,
       all: DataFrame,

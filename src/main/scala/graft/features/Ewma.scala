@@ -67,28 +67,7 @@ object Ewma {
   ): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1], got $alpha")
     require(kappa >= 0.0, s"kappa (CUSUM slack) must be >= 0, got $kappa")
-    run(prepare(df, s, valueCol), beta = 1.0 - alpha, kappa = kappa, halfLifeSec = 0.0)
-  }
-
-  /** Time-decay sibling of [[withEwma]] — pandas
-    * `ewm(halflife=..., times=...)`: the weight of an observation decays
-    * with ELAPSED TIME, not row count — `d_i = 0.5^(Δt_i / halfLife)`
-    * replaces the constant β in the same `num/den` recurrence (irregular
-    * sampling stops biasing the smooth toward burst periods). CUSUM is
-    * unchanged (drift vs the previous smoothed value). Same secondary-sort
-    * O(1)-state kernel. ScalaTest-verified against the explicit weight-sum
-    * definition; not driver-oracled — `pow` is only ~1-ulp portable across
-    * engines (BENCH.md rounding-policy law), unlike the exact-β form. */
-  def withEwmaTime(
-      df: DataFrame,
-      s: TrajSchema,
-      valueCol: String,
-      halfLifeSec: Double,
-      kappa: Double = 0.0
-  ): DataFrame = {
-    require(halfLifeSec > 0.0, s"halfLifeSec must be positive, got $halfLifeSec")
-    require(kappa >= 0.0, s"kappa (CUSUM slack) must be >= 0, got $kappa")
-    run(prepare(df, s, valueCol), beta = 0.0, kappa = kappa, halfLifeSec = halfLifeSec)
+    run(prepare(df, s, valueCol), beta = 1.0 - alpha, kappa = kappa)
   }
 
   /** Shared input projection: (entity, instant, tie-break, value) through
@@ -122,15 +101,11 @@ object Ewma {
       .as(Encoders.product[EwmaRow])
   }
 
-  /** Shared kernel: `halfLifeSec > 0` selects time decay (β ignored);
-    * otherwise the constant-β recurrence. The decay step reads the ts of
-    * the PREVIOUS NON-NULL observation (null slots carry no weight and do
-    * not age the state clock — consistent with "state untouched"). */
+  /** Shared kernel: the constant-β recurrence. */
   private def run(
       rows: org.apache.spark.sql.Dataset[EwmaRow],
       beta: Double,
-      kappa: Double,
-      halfLifeSec: Double): DataFrame = {
+      kappa: Double): DataFrame = {
     // rows arrive exchange-d + secondary-sorted from prepare() (full
     // (entity, ts, orderCols…) key — see there)
     val out = rows
@@ -138,13 +113,13 @@ object Ewma {
         // O(1) state per task: entity boundary detected on the sorted run
         var curId: String = null
         var seen = false
-        var num = 0.0; var den = 0.0; var prevEwm = 0.0; var prevTs = 0L
+        var num = 0.0; var den = 0.0; var prevEwm = 0.0
         var cp = 0.0; var cn = 0.0
         it.map { r =>
           if (r.traj_id != curId) { curId = r.traj_id; seen = false }
           r.v match {
             case Some(x) if !seen =>
-              seen = true; num = x; den = 1.0; prevEwm = x; prevTs = r.ts_us
+              seen = true; num = x; den = 1.0; prevEwm = x
               cp = 0.0; cn = 0.0
               EwmaOut(r.traj_id, r.ts_us, r.ord, r.v, Some(x), Some(0.0), Some(0.0))
             case Some(x) =>
@@ -153,14 +128,10 @@ object Ewma {
               // oracle CTE mirrors term-for-term
               cp = math.max(0.0, cp + (x - prevEwm - kappa))
               cn = math.min(0.0, cn + (x - prevEwm + kappa))
-              val step =
-                if (halfLifeSec > 0.0)
-                  math.pow(0.5, (r.ts_us - prevTs).toDouble / 1e6 / halfLifeSec)
-                else beta
-              num = x + step * num
-              den = 1.0 + step * den
+              num = x + beta * num
+              den = 1.0 + beta * den
               val y = num / den
-              prevEwm = y; prevTs = r.ts_us
+              prevEwm = y
               EwmaOut(r.traj_id, r.ts_us, r.ord, r.v, Some(y), Some(cp), Some(cn))
             case None =>
               EwmaOut(r.traj_id, r.ts_us, r.ord, None, None, None, None)

@@ -40,11 +40,12 @@ import org.apache.spark.sql.functions._
   *    `row_number ≤ N` rank-limit, which Catalyst rewrites to a map-side
   *    WindowGroupLimit — a whale entity ships O(N × tasks) rows through
   *    the compaction exchange, never its full history.
-  *  - '''the caller owns the cache''': neither function persists
-  *    anything. A streaming caller compacts once, persists and
-  *    materializes the compacted table before the first micro-batch (so
-  *    the static subplan is not re-aggregated per batch) and unpersists it
-  *    after — [[StreamDrive.asOfOverEvents]] is the reference usage.
+  *  - '''compact once, before the stream''': neither function persists
+  *    anything. A streaming caller compacts once and collects the
+  *    compacted table (≤ nEntities × keepLastN snapshots) into a local
+  *    relation before the first micro-batch, so the static subplan is not
+  *    re-aggregated per batch and there is no cache to release —
+  *    [[StreamDrive.asOfOverEvents]] is the reference usage.
   *  - '''bounded probe work''': the per-event candidate scan is
   *    O(keepLastN), not O(|history|).
   *
@@ -99,8 +100,8 @@ object StreamAsOf {
     r.getLong(0)
   }
 
-  /** Enrich a stream against an already-compacted (and, for long-running
-    * queries, caller-persisted) histories frame from [[compactBuild]].
+  /** Enrich a stream against an already-compacted (for long-running
+    * queries, locally collected) histories frame from [[compactBuild]].
     *
     * `broadcastHistories = true` plans the stream-static join as a
     * broadcast-hash join: each micro-batch is then map-only over its input

@@ -71,18 +71,17 @@ object StreamDrive {
     * in a memory sink, and return it as a DataFrame of `spark`.
     *
     * The stream runs on a clone of `spark` (same context and cache, a copy
-    * of its SQL conf), so what it sets — state partitions, the sink view —
-    * never reaches the caller's session. State stores shard by
-    * `spark.sql.shuffle.partitions`, and a batch-tuned value means that many
-    * store dirs per micro-batch, so the clone uses one per core
-    * (`defaultParallelism`); results are partition-count independent. */
+    * of its SQL conf), so what it sets — state partitions, the sink view,
+    * the clone's streaming listener bus — never outlives the call. State
+    * stores shard by `spark.sql.shuffle.partitions`, and a batch-tuned value
+    * means that many store dirs per micro-batch, so the clone uses one per
+    * core (`defaultParallelism`); results are partition-count independent. */
   private def replay(
       spark: SparkSession,
       input: DataFrame,
       orderCol: String,
       op: DataFrame => DataFrame
-  ): DataFrame = {
-    val stream = GraftSqlBridge.cloneSession(spark)
+  ): DataFrame = GraftSqlBridge.withClonedSession(spark) { stream =>
     stream.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toString)
     val sinkName = "graft_stream_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val stage = Files.createTempDirectory("graft_stream_stage_")
@@ -162,27 +161,25 @@ object StreamDrive {
     *
     * Reference usage of the bounded-history contract: the build side is
     * compacted ONCE to keep-last-N snapshots per entity
-    * ([[StreamAsOf.compactBuild]]), persisted for the replay, and released
-    * after — no per-micro-batch re-aggregation, explicit cache lifecycle.
+    * ([[StreamAsOf.compactBuild]]) and collected into a local relation
+    * (≤ nUsers × 64 snapshots, broadcast-sized) before the first
+    * micro-batch — no per-micro-batch re-aggregation, no cache to release.
     * keepLastN = 64 ≥ the deepest per-customer order history at every test
     * SF ([[StreamAsOf.droppedBuilds]] = 0 there, pinned by StreamAsOfSpec),
     * so the output equals the unbounded as-of and the shared oracle stays
     * exact. */
   def asOfOverEvents(spark: SparkSession, sfDir: String): DataFrame = {
     val (probe, build) = SparkEntry.asOfSides(spark, sfDir)
-    val histories = StreamAsOf.compactBuild(build, "user_id", "ts",
+    val compacted = StreamAsOf.compactBuild(build, "user_id", "ts",
       Seq("o_orderkey", "o_totalprice"), buildOrder = Seq("o_orderkey"), keepLastN = 64)
-      .cache()
-    histories.count() // materialize before the first micro-batch
-    try {
-      replay(spark, probe, "ts", s =>
-        StreamAsOf.enrichCompacted(s, histories, "user_id", "ts",
-            Seq("o_orderkey", "o_totalprice"),
-            // bounded build: ≤ nUsers × 64 snapshot structs — broadcast it
-            // so every micro-batch is map-only (no per-batch exchange; the
-            // 128-partition shuffle join was re-launched per micro-batch)
-            broadcastHistories = true)
-          .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice")))
-    } finally histories.unpersist()
+    val histories = spark.createDataFrame(
+      java.util.Arrays.asList(compacted.collect(): _*), compacted.schema)
+    replay(spark, probe, "ts", s =>
+      StreamAsOf.enrichCompacted(s, histories, "user_id", "ts",
+          Seq("o_orderkey", "o_totalprice"),
+          // bounded build: ≤ nUsers × 64 snapshot structs — broadcast it
+          // so every micro-batch is map-only (no per-batch exchange)
+          broadcastHistories = true)
+        .select(col("event_id"), col("asof_ts"), col("o_orderkey"), col("o_totalprice")))
   }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus
 
 /** Package-visibility shim for `Dataset.ofRows` (private[sql]) — the one
   * hook a library needs to hand a custom LogicalPlan back to the public
@@ -10,9 +11,20 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** A session sharing `spark`'s context and cache, with a copy of its SQL conf. */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[classic.SparkSession].cloneSession()
+  /** Run `body` on a session sharing `spark`'s context and cache, with a
+    * copy of its SQL conf. Each streaming query manager (the clone's, and
+    * the one a stateful query's own internal session creates) registers a
+    * `StreamingQueryListenerBus` on the shared listener bus that Spark never
+    * removes, so every such bus added during `body` is detached afterwards.
+    * Calls are serialized so the diff names only this call's buses; a
+    * manager another thread creates meanwhile would be detached too. */
+  def withClonedSession[T](spark: SparkSession)(body: SparkSession => T): T = synchronized {
+    val bus = spark.sparkContext.listenerBus
+    def streamBuses = bus.findListenersByClass[StreamingQueryListenerBus]().toSet
+    val before = streamBuses
+    try body(spark.asInstanceOf[classic.SparkSession].cloneSession())
+    finally (streamBuses -- before).foreach(bus.removeListener)
+  }
 
   /** Column from a raw catalyst Expression (for custom codegen'd
     * expressions used through the DataFrame API). */

@@ -86,28 +86,6 @@ class EwmaCapSpec extends SparkSpec {
     assert(first.getDouble(5) == 0.0 && first.getDouble(6) == 0.0)
   }
 
-  test("withEwmaTime equals the time-decay weight-sum definition") {
-    val h = 120.0 // seconds half-life
-    val out = Ewma.withEwmaTime(df, Sfull, "lat", halfLifeSec = h)
-      .where(col("v").isNotNull).orderBy("traj_id", "ts_us").collect()
-    // entity a non-null series: (t=0, 1.0), (100, 2.0), (200, 4.0), (400, 8.0)
-    val series = Seq((0.0, 1.0), (100.0, 2.0), (200.0, 4.0), (400.0, 8.0))
-    val aRows = out.filter(_.getString(0) == "a")
-    for (i <- series.indices) {
-      val (ti, _) = series(i)
-      val w = series.take(i + 1).map { case (tj, _) => math.pow(0.5, (ti - tj) / h) }
-      val want = w.zip(series.take(i + 1).map(_._2)).map { case (a, b) => a * b }.sum / w.sum
-      assertClose(Some(aRows(i).getDouble(4)), Some(want))
-    }
-    // a 10-half-life gap all but resets the state toward the new value
-    val far = Seq(("z", 1L, 0L, 1.0), ("z", 2L, 1200L, 100.0))
-      .map { case (id, e, sec, v) => (id, e, new java.sql.Timestamp(sec * 1000L), v) }
-      .toDF("traj_id", "event_id", "ts", "lat")
-    val last = Ewma.withEwmaTime(far, Sfull, "lat", halfLifeSec = h)
-      .orderBy("ts_us").collect().last.getDouble(4)
-    assert(math.abs(last - 100.0) < 0.1, s"decayed mean $last should hug the new value")
-  }
-
   test("withRollingZ matches a brute-force trailing mean/std/z") {
     val vals = Seq(1.0, 2.0, 4.0, 8.0, 3.0)
     val zdf = vals.zipWithIndex

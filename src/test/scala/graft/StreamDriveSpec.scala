@@ -71,6 +71,13 @@ class StreamDriveSpec extends SparkSpec {
     assert(views.isEmpty, views.mkString(", "))
   }
 
+  test("replays leave no streaming listener bus behind") {
+    val sc = spark.sparkContext
+    val before = BusDrain.streamingBuses(sc)
+    val counts = (1 to 5).map { _ => StreamDrive.asOfOverEvents(spark, Sf); BusDrain.streamingBuses(sc) }
+    assert(counts == Seq.fill(5)(before))
+  }
+
   test("each replay runs exactly two non-empty micro-batches") {
     val batches = new ConcurrentHashMap[String, Integer]()
     // replays run on cloned sessions, whose progress events reach only the
