@@ -619,21 +619,21 @@ object SparkEntry {
     asOfSpec("q_asof_orders_merge", backwardAsOfSql)((probe, build) =>
       graft.asof.AsOfMerge.backward(probe, build, "user_id", "ts", AsOfValues, buildOrder = Seq("o_orderkey"))),
 
-    // As-of banded — whale-entity splitting over (entity, 30-day band)
-    // groups with carry-row replication; exact backward semantics, bounded
-    // per-task rows
+    // As-of banded — whale-entity splitting: the merge exec's range mode
+    // slices both sides by shared, data-sized (entity, ts) bounds; exact
+    // backward semantics
     asOfSpec("q_asof_orders_banded", backwardAsOfSql)((probe, build) =>
       graft.asof.AsOfBanded.backwardBanded(probe, build, "user_id", "ts", AsOfValues,
-        bandSeconds = 30 * 86400.0, buildOrder = Seq("o_orderkey"))),
+        buildOrder = Seq("o_orderkey"))),
 
-    // banded FORWARD/NEAREST — same whale-splitting, mirrored/two-sided
-    // carries
+    // banded FORWARD/NEAREST — the same slices; each slice's walk also gets
+    // the first build row after it
     asOfSpec("q_asof_forward_banded", forwardAsOfSql)((probe, build) =>
       graft.asof.AsOfBanded.forwardBanded(probe, build, "user_id", "ts", AsOfValues,
-        bandSeconds = 30 * 86400.0, buildOrder = Seq("o_orderkey"))),
+        buildOrder = Seq("o_orderkey"))),
     asOfSpec("q_asof_nearest_banded", nearestAsOfSql)((probe, build) =>
       graft.asof.AsOfBanded.nearestBanded(probe, build, "user_id", "ts", AsOfValues,
-        bandSeconds = 30 * 86400.0, buildOrder = Seq("o_orderkey"))),
+        buildOrder = Seq("o_orderkey"))),
 
     // Point-in-interval join — events matched to multi-day order validity
     // windows [orderdate, orderdate + 1..7 days). q_asof_interval is the

@@ -1,16 +1,24 @@
 package graft.asof
 
-import org.apache.spark.rdd.RDD
+import scala.jdk.CollectionConverters._
+import org.apache.spark.{Partitioner, RangePartitioner, ShuffleDependency, SparkEnv}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, Attribute, AttributeReference, AttributeSet, BindReferences, Descending,
-  GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection
+  Ascending, Attribute, AttributeReference, AttributeSeq, AttributeSet, BindReferences,
+  GenericInternalRow, InterpretedOrdering, JoinedRow, RowOrdering, SortOrder, SortPrefix,
+  UnsafeProjection, UnsafeRow
 }
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{
+  ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning, UnspecifiedDistribution
+}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{
+  BinaryExecNode, SortPrefixUtils, SparkPlan, UnsafeExternalRowSorter, UnsafeRowSerializer
+}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
@@ -27,12 +35,15 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   *     children → Catalyst's EnsureRequirements co-partitions them (and
   *     elides an exchange entirely when a side is already hash-clustered —
   *     the shuffle-avoidance the v1 scaladoc promised);
-  *   - `requiredChildOrdering` = (entity, ts[, tieBreaks]) per side → two
-  *     independent (smaller) sorts instead of one union sort;
+  *   - `requiredChildOrdering` = (entity, ts[, tieBreaks]) ASC per side →
+  *     two independent (smaller) sorts instead of one union sort;
   *   - execution = one streaming merge pass per co-partition: advance the
-  *     build iterator while its (entity, ts) key ≤ the probe key, retain the
-  *     last build row, emit probe ⋈ match. O(|probe|+|build|) comparisons,
-  *     O(1) memory (ONE retained row), no window row-buffering.
+  *     build iterator while its (entity, ts) key is behind the probe key,
+  *     retain the last build row, emit probe ⋈ match. O(|probe|+|build|)
+  *     comparisons, O(1) memory (ONE retained row), no window row-buffering.
+  *
+  * [[AsOfBanded]] plans the same exec in its range-partitioned mode, which
+  * splits a whale entity into data-sized slices (see [[AsOfMergeExec]]).
   *
   * Semantics are identical to v1 by construction and by test (AsOfMergeSpec
   * asserts exceptAll-equality in both directions, incl. tolerance and tie
@@ -56,9 +67,9 @@ object AsOfMerge {
 
   /** FORWARD direction through the same exec — semantics of
     * [[AsOfJoin.forward]] (earliest build.ts ≥ probe.ts, smallest
-    * buildOrder at the matched ts), cost of the streaming merge: the
-    * children are sorted (entity ASC, ts DESC[, buildOrder DESC]) and the
-    * identical one-retained-row walk runs on the mirrored order. */
+    * buildOrder at the matched ts), cost of the streaming merge: the walk
+    * consumes only build rows strictly behind the probe key, so the
+    * iterator HEAD is the match. */
   def forward(
       probe: DataFrame,
       build: DataFrame,
@@ -88,7 +99,7 @@ object AsOfMerge {
   ): DataFrame =
     merge(probe, build, entity, ts, valueCols, toleranceSec, buildOrder, Direction.Nearest)
 
-  private def merge(
+  private[asof] def merge(
       probe: DataFrame,
       build: DataFrame,
       entity: String,
@@ -96,7 +107,8 @@ object AsOfMerge {
       valueCols: Seq[String],
       toleranceSec: Double,
       buildOrder: Seq[String],
-      direction: Direction.Value
+      direction: Direction.Value,
+      ranged: Boolean = false
   ): DataFrame = {
     require(!probe.columns.exists(valueCols.contains), "value columns collide with probe columns")
     val spark = probe.sparkSession
@@ -140,7 +152,7 @@ object AsOfMerge {
     val asofTs = AttributeReference("asof_ts", buildTsAttr.dataType, nullable = true)()
     val plan = AsOfMergePlan(
       probeAligned.queryExecution.analyzed, buildPlan,
-      entity, ts, valueCols, toleranceSec, buildOrder, asofTs, direction
+      entity, ts, valueCols, toleranceSec, buildOrder, asofTs, direction, ranged
     )
     // output keeps the widened key types — exactly what v1's union emits
     GraftSqlBridge.ofRows(spark, plan)
@@ -153,7 +165,8 @@ object Direction extends Enumeration {
 }
 
 /** Logical node: output = probe columns ++ asof_ts ++ build value columns
-  * (match columns nullable — a probe row may have no match). */
+  * (match columns nullable — a probe row may have no match); `ranged`
+  * selects the exec's range-partitioned mode. */
 case class AsOfMergePlan(
     probe: LogicalPlan,
     build: LogicalPlan,
@@ -163,7 +176,8 @@ case class AsOfMergePlan(
     toleranceSec: Double,
     buildOrder: Seq[String],
     asofTs: AttributeReference,
-    direction: Direction.Value
+    direction: Direction.Value,
+    ranged: Boolean
 ) extends BinaryNode {
 
   override def left: LogicalPlan = probe
@@ -191,7 +205,7 @@ object AsOfMergeStrategy extends SparkStrategy {
     case m: AsOfMergePlan =>
       AsOfMergeExec(
         m.entity, m.ts, m.valueCols, m.toleranceSec, m.buildOrder, m.output,
-        planLater(m.probe), planLater(m.build), m.direction) :: Nil
+        planLater(m.probe), planLater(m.build), m.direction, m.ranged) :: Nil
     case _ => Nil
   }
 }
@@ -206,17 +220,30 @@ object AsOfMergeExec {
   private[graft] val skewWarningCount = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
-/** WHALE-ENTITY EXPOSURE (VERDICT r3 item 3): this exec clusters by entity
-  * only, so one hot entity serializes into ONE task — the same exposure
-  * SortMergeJoin has, except AQE's skew-join splitting does NOT apply to
-  * custom execs (OptimizeSkewedJoin pattern-matches SMJ/SHJ). A partition
-  * whose row traffic crosses `spark.graft.asof.skewWarnRows` (default 1e8)
-  * logs a warning naming the mitigation: [[AsOfBanded.backwardBanded]],
-  * which splits entities into (entity, time-band) groups with carry-row
-  * replication — exact backward semantics, bounded per-task rows
-  * (AsOfBandedSpec proves both). The walk itself stays O(n) with O(1)
-  * memory regardless — the cost is wall-clock serialization, not a
-  * buffering blow-up. */
+/** WHALE-ENTITY EXPOSURE (VERDICT r3 item 3): the default (hash) mode
+  * clusters by entity only, so one hot entity serializes into ONE task —
+  * the same exposure SortMergeJoin has, except AQE's skew-join splitting
+  * does NOT apply to custom execs (OptimizeSkewedJoin pattern-matches
+  * SMJ/SHJ). A partition whose row traffic crosses
+  * `spark.graft.asof.skewWarnRows` (default 1e8) logs a warning naming the
+  * mitigation, the range-partitioned mode ([[AsOfBanded]]):
+  *
+  *   - ONE set of (entity, ts) range bounds, sampled once over both sides'
+  *     keys, slices both children (Spark cannot co-partition two
+  *     RangePartitioning exchanges, so the exec shuffles them itself);
+  *     equal (entity, ts) keys share a slice, and the slice count comes
+  *     from `spark.sql.shuffle.partitions`;
+  *   - both map stages run first, side by side, and the build's reports
+  *     each slice's first and last build row; every slice is then fed its
+  *     boundary context — the last build row of the nearest non-empty
+  *     earlier slice, prepended, and the first of the nearest non-empty
+  *     later slice, appended — so the unchanged walk sees the true backward
+  *     and forward candidates;
+  *   - 4 stages: the key sample, the two map stages, the walk.
+  *
+  * The walk itself stays O(n) with O(1) memory in both modes — the cost of
+  * a whale in hash mode is wall-clock serialization, not a buffering
+  * blow-up. */
 case class AsOfMergeExec(
     entity: String,
     ts: String,
@@ -226,7 +253,8 @@ case class AsOfMergeExec(
     override val output: Seq[Attribute],
     left: SparkPlan,
     right: SparkPlan,
-    direction: Direction.Value = Direction.Backward
+    direction: Direction.Value = Direction.Backward,
+    ranged: Boolean
 ) extends BinaryExecNode {
 
   private def attr(side: SparkPlan, name: String): Attribute =
@@ -238,22 +266,23 @@ case class AsOfMergeExec(
   private lazy val buildTs = attr(right, ts)
 
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(Seq(probeEntity)) :: ClusteredDistribution(Seq(buildEntity)) :: Nil
+    if (ranged) UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
+    else ClusteredDistribution(Seq(probeEntity)) :: ClusteredDistribution(Seq(buildEntity)) :: Nil
 
-  // forward = the exact mirror: ts (and tie-breaks) DESC within entity,
-  // so the same consume-while-behind walk yields the earliest future row;
-  // nearest keeps the backward (ASC) layout — its forward candidate is the
-  // iterator head, not a retained row
-  private def tsDir = if (direction == Direction.Forward) Descending else Ascending
+  // every direction walks (entity, ts[, tie-breaks]) ASC: forward reads its
+  // match off the iterator head instead of a mirrored sort
+  private lazy val probeOrder = Seq(SortOrder(probeEntity, Ascending), SortOrder(probeTs, Ascending))
+  private lazy val buildOrdering =
+    (Seq(buildEntity, buildTs) ++ buildOrder.map(attr(right, _))).map(SortOrder(_, Ascending))
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    Seq(SortOrder(probeEntity, Ascending), SortOrder(probeTs, tsDir)),
-    Seq(SortOrder(buildEntity, Ascending), SortOrder(buildTs, tsDir)) ++
-      buildOrder.map(c => SortOrder(attr(right, c), tsDir))
-  )
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    if (ranged) Seq(Nil, Nil) else Seq(probeOrder, buildOrdering)
 
-  override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = left.outputOrdering
+  // range mode: an entity spans slices, so no clustering is claimed (a
+  // downstream groupBy(entity) plans its own exchange)
+  override def outputPartitioning: Partitioning =
+    if (ranged) UnknownPartitioning(0) else left.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = if (ranged) probeOrder else left.outputOrdering
 
   override protected def doExecute(): RDD[InternalRow] = {
     // capture ONLY serializable specs (attributes, expressions, scalars);
@@ -268,8 +297,7 @@ case class AsOfMergeExec(
       (buildTs.withNullability(true) +: valueCols.map(c => attr(right, c).withNullability(true)))
     val boundOut = BindReferences.bindReferences(
       outExprs,
-      org.apache.spark.sql.catalyst.expressions.AttributeSeq(
-        leftOutput ++ rightOutput.map(_.withNullability(true)))
+      AttributeSeq(leftOutput ++ rightOutput.map(_.withNullability(true)))
     )
     val buildWidth = rightOutput.length
     val buildTsOrdinal = rightOutput.indexWhere(_.name == ts)
@@ -278,24 +306,21 @@ case class AsOfMergeExec(
     val tsType = probeTs.dataType
 
     val isForward = direction == Direction.Forward
-    val isNearest = direction == Direction.Nearest
+    val isBackward = direction == Direction.Backward
+    val needGap = tolMicros >= 0 || direction == Direction.Nearest
     val skewWarnRows = session.sessionState.conf
       .getConfString(AsOfMergeExec.SkewWarnRowsKey, AsOfMergeExec.SkewWarnRowsDefault.toString)
       .toLong
-    left.execute().zipPartitions(right.execute()) { (probeIter, buildIter) =>
-      // lexicographic walk in the children's REQUIRED sort order: entity
-      // ASC, then ts in the direction's order (ASC backward / DESC
-      // forward, so "behind" always means "still visible"). Null entities
-      // compare equal ⇒ they match each other (v1 semantics); null ts
-      // sorts where the SortOrder defaults put it (first in ASC, last in
-      // DESC) and the natural-ascending comparator negated for DESC agrees.
+    val walk = (probeIter: Iterator[InternalRow], buildIter: Iterator[InternalRow]) => {
+      // lexicographic walk in the children's sort order (entity, ts ASC).
+      // Null entities compare equal ⇒ they match each other (v1
+      // semantics); null ts sorts first, as the SortOrder defaults put it.
       val entityOrdering = RowOrdering.createNaturalAscendingOrdering(keyTypes.take(1))
       val tsOrdering = RowOrdering.createNaturalAscendingOrdering(keyTypes.drop(1))
       val probeEntityGen = UnsafeProjection.create(probeKeyAttrs.take(1), leftOutput)
       val buildEntityGen = UnsafeProjection.create(buildKeyAttrs.take(1), rightOutput)
       val probeTsGen = UnsafeProjection.create(probeKeyAttrs.drop(1), leftOutput)
       val buildTsGen = UnsafeProjection.create(buildKeyAttrs.drop(1), rightOutput)
-      val tsSign = if (isForward) -1 else 1
       val outProject = UnsafeProjection.create(boundOut)
       // event-time micros for distance/tolerance arithmetic — mirrors v1's
       // `unix_micros(cast(ts as timestamp_ltz))` for the numeric types
@@ -335,7 +360,8 @@ case class AsOfMergeExec(
           org.slf4j.LoggerFactory.getLogger("graft.asof.AsOfMergeExec").warn(
             s"[graft] as-of merge partition exceeded $skewWarnRows rows — entity skew " +
               "serializes into one task (AQE skew split does not see custom execs); " +
-              "use AsOfBanded.backwardBanded to split whale entities into time bands " +
+              "use AsOfBanded (the range-partitioned mode) to split whale entities into " +
+              "data-sized (entity, ts) slices " +
               s"(threshold conf: ${AsOfMergeExec.SkewWarnRowsKey})")
         }
       }
@@ -347,15 +373,18 @@ case class AsOfMergeExec(
         // stay valid through this row's whole consume loop
         val pEnt = probeEntityGen(p)
         val pTs = probeTsGen(p)
-        // copy() per consumed row is REQUIRED, not an optimization miss:
-        // sorter iterators reuse one UnsafeRow object, and the loop
-        // condition's buffered.head materializes the NEXT row into that
-        // same object — any retained reference must own its bytes.
+        // consume the build rows behind the probe key: at or before it for
+        // backward/nearest (equal times visible, the last tie-break is
+        // retained), strictly before it for forward (the head is then the
+        // earliest row at or after it, first tie-break). copy() per
+        // consumed row is REQUIRED: sorter iterators reuse one UnsafeRow,
+        // and the loop condition's buffered.head materializes the NEXT row
+        // into that same object — any retained reference must own its bytes.
         while (buffered.hasNext && {
           val b = buffered.head
           val ec = entityOrdering.compare(buildEntityGen(b), pEnt)
-          if (ec != 0) ec < 0
-          else tsSign * tsOrdering.compare(buildTsGen(b), pTs) <= 0
+          val c = if (ec != 0) ec else tsOrdering.compare(buildTsGen(b), pTs)
+          c < 0 || c == 0 && !isForward
         }) {
           bumpSkew()
           lastBuild = buffered.next().copy()
@@ -364,47 +393,118 @@ case class AsOfMergeExec(
         // match timestamp is the payload's _m_ts and a null there means
         // "no usable candidate", not "match with a null time"
         val pTsOk = !p.isNullAt(probeTsOrdinal)
-        val retainedOk =
-          lastBuild != null && pTsOk &&
-            entityOrdering.compare(buildEntityGen(lastBuild), pEnt) == 0 &&
-            !lastBuild.isNullAt(buildTsOrdinal)
+        @inline def gap(b: InternalRow, back: Boolean): Long =
+          if (back) micros(p, probeTsOrdinal) - micros(b, buildTsOrdinal)
+          else micros(b, buildTsOrdinal) - micros(p, probeTsOrdinal)
+        @inline def usable(b: InternalRow, back: Boolean): Boolean =
+          b != null && pTsOk && !b.isNullAt(buildTsOrdinal) &&
+            entityOrdering.compare(buildEntityGen(b), pEnt) == 0 &&
+            (!needGap || finiteTs(p, probeTsOrdinal) && finiteTs(b, buildTsOrdinal) &&
+              (tolMicros < 0 || gap(b, back) <= tolMicros))
+        // backward candidate = the retained row; forward candidate = the
+        // iterator HEAD (same entity ⇒ the smallest later key, smallest
+        // tie-break). head is only read, never retained, so the sorter's
+        // buffer reuse is safe here. Nearest: the closer wins, backward on
+        // ties.
+        val bOk = !isForward && usable(lastBuild, back = true)
+        val fRow = if (isBackward || !buffered.hasNext) null else buffered.head
+        val fOk = usable(fRow, back = false)
         val chosen =
-          if (!isNearest) {
-            val matched = retainedOk &&
-              (tolMicros < 0 || {
-                finiteTs(p, probeTsOrdinal) && finiteTs(lastBuild, buildTsOrdinal) && {
-                  val d =
-                    if (isForward) micros(lastBuild, buildTsOrdinal) - micros(p, probeTsOrdinal)
-                    else micros(p, probeTsOrdinal) - micros(lastBuild, buildTsOrdinal)
-                  d <= tolMicros
-                }
-              })
-            if (matched) lastBuild else null
-          } else {
-            // nearest: backward candidate = the retained row; forward
-            // candidate = the iterator HEAD (same entity ⇒ smallest
-            // strictly-future ts, smallest tie-break — equal-ts rows were
-            // all consumed). head is only read, never retained, so the
-            // sorter's buffer reuse is safe here.
-            val pFinite = finiteTs(p, probeTsOrdinal)
-            val bOk = retainedOk && pFinite && finiteTs(lastBuild, buildTsOrdinal) &&
-              (tolMicros < 0 ||
-                micros(p, probeTsOrdinal) - micros(lastBuild, buildTsOrdinal) <= tolMicros)
-            val fRow = if (buffered.hasNext) buffered.head else null
-            val fOk = fRow != null && pTsOk && pFinite &&
-              entityOrdering.compare(buildEntityGen(fRow), pEnt) == 0 &&
-              !fRow.isNullAt(buildTsOrdinal) && finiteTs(fRow, buildTsOrdinal) &&
-              (tolMicros < 0 ||
-                micros(fRow, buildTsOrdinal) - micros(p, probeTsOrdinal) <= tolMicros)
-            if (bOk && (!fOk ||
-                micros(p, probeTsOrdinal) - micros(lastBuild, buildTsOrdinal) <=
-                  micros(fRow, buildTsOrdinal) - micros(p, probeTsOrdinal))) lastBuild
-            else if (fOk) fRow
-            else null
-          }
-        outProject(joined(p, if (chosen != null) chosen else nullBuild))
+          if (bOk && !(fOk && gap(lastBuild, back = true) > gap(fRow, back = false))) lastBuild
+          else if (fOk) fRow
+          else nullBuild
+        outProject(joined(p, chosen))
       }
     }
+    val (probeSlices, buildSlices) =
+      if (ranged) rangeSlices() else (left.execute(), right.execute())
+    probeSlices.zipPartitions(buildSlices)(walk)
+  }
+
+  /** Range mode: both children sliced by one set of (entity, ts) bounds and
+    * sorted per slice; each build slice is framed by its boundary context —
+    * the last build row of the nearest non-empty slice below it, prepended,
+    * and the first of the nearest non-empty slice above it, appended. Keys
+    * in lower slices are strictly smaller, so both frame rows keep the
+    * slice sorted. The slice is the RDD partition index, never the task's
+    * partition id (a coalesce or union above re-numbers tasks). */
+  private def rangeSlices(): (RDD[InternalRow], RDD[InternalRow]) = {
+    val (leftOutput, rightOutput) = (left.output, right.output)
+    val (probeKeys, buildKeys) = (Seq(probeEntity, probeTs), Seq(buildEntity, buildTs))
+    val (probeRows, buildRows) = (left.execute(), right.execute())
+    def keys(rows: RDD[InternalRow], key: Seq[Attribute], out: Seq[Attribute]) =
+      rows.mapPartitions { it =>
+        val proj = UnsafeProjection.create(key, out)
+        it.map(r => (proj(r).copy(): InternalRow, null))
+      }
+    val bounds = new RangePartitioner(conf.numShufflePartitions,
+      keys(probeRows, probeKeys, leftOutput).union(keys(buildRows, buildKeys, rightOutput)))(
+      InterpretedOrdering.forSchema(probeKeys.map(_.dataType)), // shipped to tasks
+      scala.reflect.classTag[InternalRow])
+    val n = bounds.numPartitions
+    val rowOrdering =
+      new InterpretedOrdering(BindReferences.bindReferences(buildOrdering, AttributeSeq(rightOutput)))
+    // widen slice s's [first, last] build rows to cover f and l
+    val cover = (first: Array[InternalRow], last: Array[InternalRow], s: Int,
+        f: InternalRow, l: InternalRow) => {
+      if (first(s) == null || rowOrdering.lt(f, first(s))) first(s) = f.copy()
+      if (last(s) == null || rowOrdering.gt(l, last(s))) last(s) = l.copy()
+    }
+    val edges = sparkContext.collectionAccumulator[(Int, InternalRow, InternalRow)]
+    // map side: (slice id, row); rows are written before the next is read
+    // (serialized shuffle writers), so none is copied
+    def slice(rows: RDD[InternalRow], key: Seq[Attribute], out: Seq[Attribute], isBuild: Boolean) = {
+      val pairs = rows.mapPartitions { it =>
+        val proj = UnsafeProjection.create(key, out)
+        val (first, last) = (new Array[InternalRow](n), new Array[InternalRow](n))
+        it.map { r =>
+          val s = bounds.getPartition(proj(r))
+          if (isBuild) cover(first, last, s, r, r)
+          (s, r)
+        } ++ {
+          for (s <- 0 until n if first(s) != null) edges.add((s, first(s), last(s)))
+          Iterator.empty
+        }
+      }
+      new ShuffledRDD[Int, InternalRow, InternalRow](pairs, new Partitioner {
+        def numPartitions: Int = n
+        def getPartition(key: Any): Int = key.asInstanceOf[Int]
+      }).setSerializer(new UnsafeRowSerializer(out.length))
+    }
+    // SortExec's sorter, with pages sized to the slice's shuffled bytes
+    // (from 1 MB up to the memory manager's page): a full page per side of
+    // every tiny slice would dwarf the data it sorts
+    val maxPage = SparkEnv.get.memoryManager.pageSizeBytes
+    def sorted(sliced: RDD[(Int, InternalRow)], order: Seq[SortOrder], out: Seq[Attribute],
+        bytes: Array[Long]) = sliced.mapPartitionsWithIndex { (slice, it) =>
+      val lead = BindReferences.bindReference(order.head, AttributeSeq(out))
+      val prefix = SortPrefix(lead)
+      val prefixProj = UnsafeProjection.create(Seq(prefix))
+      val prefixComputer = new UnsafeExternalRowSorter.PrefixComputer {
+        private val result = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+        override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+          val p = prefixProj(row)
+          result.isNull = p.isNullAt(0)
+          result.value = if (result.isNull) prefix.nullValue else p.getLong(0)
+          result
+        }
+      }
+      UnsafeExternalRowSorter.create(DataTypeUtils.fromAttributes(out), RowOrdering.create(order, out),
+        SortPrefixUtils.getPrefixComparator(lead), prefixComputer,
+        bytes(slice).max(1L << 20).min(maxPage), false)
+        .sort(it.map(_._2.asInstanceOf[UnsafeRow]))
+    }
+    val (probeSliced, buildSliced) = (slice(probeRows, probeKeys, leftOutput, isBuild = false),
+      slice(buildRows, buildKeys, rightOutput, isBuild = true))
+    val Seq(probeBytes, buildBytes) = GraftSqlBridge.runMapStages(Seq(probeSliced, buildSliced)
+      .map(_.dependencies.head.asInstanceOf[ShuffleDependency[_, _, _]]))
+    val (first, last) = (new Array[InternalRow](n), new Array[InternalRow](n))
+    edges.value.asScala.foreach { case (s, f, l) => cover(first, last, s, f, l) }
+    val before = last.scanLeft(null: InternalRow)((c, x) => if (x != null) x else c)
+    val after = first.scanRight(null: InternalRow)((x, c) => if (x != null) x else c).tail
+    (sorted(probeSliced, probeOrder, leftOutput, probeBytes),
+      sorted(buildSliced, buildOrdering, rightOutput, buildBytes).mapPartitionsWithIndex {
+        (slice, it) => Option(before(slice)).iterator ++ it ++ Option(after(slice)).iterator })
   }
 
   override protected def withNewChildrenInternal(

@@ -600,9 +600,10 @@ object Dedup {
     *     This is the engine's one persisted plan: each round's labels feed
     *     the next round's join and its change count, so without a cache
     *     round i would recompute rounds 1..i, and pairs that did not fit
-    *     the local path cannot be collected instead. The pairs and edges
-    *     are released on return; the returned frame's lineage holds the
-    *     final label cache (evictable). */
+    *     the local path cannot be collected instead. Every cache is
+    *     released on return: the converged labels are local-checkpointed
+    *     first, so the returned frame reads that copy, and nothing stays in
+    *     the host's cache manager. */
   def dupClusters(
       pairs: DataFrame,
       all: DataFrame,
@@ -673,9 +674,9 @@ object Dedup {
         it += 1
       }
       require(converged, s"dupClusters did not converge in $maxIters rounds")
-      und.unpersist()
-      p2c.unpersist()
-      clusterOutput(all, id, labels.withColumnRenamed("node", id))
+      val fixpoint = labels.localCheckpoint()
+      Seq(labels, und, p2c).foreach(_.unpersist())
+      clusterOutput(all, id, fixpoint.withColumnRenamed("node", id))
     }
   }
 

@@ -19,7 +19,12 @@ import org.apache.spark.sql.functions._
   * keeps the min-id row of each duplicate group (a global choice), a stream
   * keeps the FIRST ARRIVAL (the only causal choice). Duplicates farther
   * apart in event time than the watermark horizon are NOT collapsed — that
-  * residue is what the batch [[graft.dedup.Dedup.exact]] sweep removes. */
+  * residue is what the batch [[graft.dedup.Dedup.exact]] sweep removes.
+  *
+  * Host sessions: each start of a query over this stateful operator leaks
+  * one `StreamingQueryListenerBus` on the shared listener bus (Spark runs
+  * it on an internal session clone whose query manager never removes its
+  * bus); [[StreamDrive.replay]] detaches it, a host's own start does not. */
 object StreamDedup {
 
   /** Drop exact-duplicate docs (same `text` bytes) within the watermark

@@ -47,6 +47,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * per-group iterator ordering ONLY if the source preserves it, so the
   * worker sorts each micro-batch group by ts (micro-batches are small per
   * entity; this is not a global sort).
+  *
+  * Host sessions: each start of a query over this stateful operator leaks
+  * one `StreamingQueryListenerBus` on the shared listener bus (Spark runs
+  * it on an internal session clone whose query manager never removes its
+  * bus); [[StreamDrive.replay]] detaches it, a host's own start does not.
   */
 object StreamSessionize {
 

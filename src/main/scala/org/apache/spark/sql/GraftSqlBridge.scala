@@ -26,6 +26,15 @@ object GraftSqlBridge {
     finally (streamBuses -- before).foreach(bus.removeListener)
   }
 
+  /** Run the map stages of `deps` concurrently and return each one's bytes
+    * per reduce partition (`submitMapStage`, private to Spark, is how
+    * adaptive execution runs its query stages); a later job over the
+    * shuffles skips those stages. */
+  def runMapStages(deps: Seq[org.apache.spark.ShuffleDependency[_, _, _]]): Seq[Array[Long]] =
+    deps.map(d => d -> Option.when(d.rdd.partitions.nonEmpty)(d.rdd.sparkContext.submitMapStage(d)))
+      .map { case (d, run) =>
+        run.fold(new Array[Long](d.partitioner.numPartitions))(_.get().bytesByPartitionId) }
+
   /** Column from a raw catalyst Expression (for custom codegen'd
     * expressions used through the DataFrame API). */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.SyntheticCorpus
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, functions}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalactic.source.Position
@@ -86,6 +86,39 @@ class PlanShapeSpec extends SparkSpec {
     assertPlan(near, s"asof nearest: TWO cumulative WindowExecs, got $nearWindows")(nearWindows == 2)
     assertPlan(near, "asof nearest: no following-frame aggregate")(
       !nearPlan.contains("unboundedfollowing$()"))
+  }
+
+  test("banded as-of queries run at most 4 stages: key sample, two map stages, the walk") {
+    val sc = spark.sparkContext
+    for (q <- SparkEntry.select(Seq("q_asof_orders_banded", "q_asof_forward_banded",
+        "q_asof_nearest_banded"))) {
+      val df = q.build(spark, dir)
+      val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          stages.incrementAndGet()
+      }
+      org.apache.spark.BusDrain.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        df.write.format("noop").mode("overwrite").save()
+        org.apache.spark.BusDrain.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      assertPlan(df, s"${q.name}: ${stages.get} stages run, at most 4 expected")(stages.get <= 4)
+    }
+  }
+
+  test("a groupBy(entity) over the range-mode as-of still plans its exchange") {
+    val banded = graft.asof.AsOfBanded.backwardBanded(probe, build, "user_id", "ts", AsOfValues,
+      buildOrder = Seq("o_orderkey"))
+    val perUser = banded.groupBy("user_id").agg(functions.count("*"))
+    val perUserPlan = planOf(perUser)
+    // range slices split an entity, so no hash clustering may be claimed
+    assertPlan(perUser, "range-mode as-of: groupBy(entity) plans a hash exchange")(
+      count("Exchange hashpartitioning\\(user_id", perUserPlan) == 1)
+    assertPlan(perUser, "range-mode as-of: the exec shuffles its own children")(
+      count("Exchange", perUserPlan) == 1)
   }
 
   test("as-of merge over bucketed tables plans no exchange") {

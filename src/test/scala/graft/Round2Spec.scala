@@ -96,6 +96,17 @@ class DupClustersSpec extends SparkSpec {
       assert(out.count(_._3) == 13 - 3, "one keeper per cluster")
     }
   }
+
+  test("the distributed path leaves nothing in the host's cache manager") {
+    import spark.implicits._
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache() // earlier suites may leave theirs
+    val pairs = Seq((2L, 7L), (7L, 9L), (11L, 12L)).toDF("id_a", "id_b")
+    val out = Dedup.dupClusters(pairs, (1L to 13L).toDF("doc_id"), localLimit = 0).collect()
+    assert(out.length == 13)
+    assert(cacheManager.isEmpty, "a label, edge or pair cache outlived the call")
+  }
 }
 
 class DecontamPiiSpec extends SparkSpec {
