@@ -23,6 +23,11 @@ object Driver {
     * either way. */
   private val ObjHashFallback = 4194304
 
+  /** Entries of the JVM-wide compiled-codegen cache (Spark default 100, less
+    * than one pass over the registry). A static conf: it takes effect only if
+    * no codegen ran in the JVM before [[session]] built the session. */
+  private val CodegenCache = 4096
+
   /** The dataset directory the mains read when none is given. */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -45,6 +50,7 @@ object Driver {
     // single wave stalls on stragglers)
     "spark.sql.shuffle.partitions" -> (4 * cores).toString,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> ObjHashFallback.toString,
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCache.toString,
     "spark.sql.windowExec.buffer.in.memory.threshold" -> WindowBuffer.toString,
     // lets AQE coalesce the stages of persisted plans; the engine's one
     // persisted plan, `Dedup.dupClusters`' distributed path, reads ~28%

@@ -37,6 +37,10 @@ object TextHash {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), w => w =!= "")
 
+  /** Per-document term counts, `array<struct<term, tf>>`: the [[tokens]]
+    * of one row counted in one codegen'd pass ([[TermCountsExpr]]). */
+  def termCounts(text: Column): Column = kcol(TermCountsExpr(kexp(text)))
+
   /** Per-token polynomial hashes (codegen'd kernel). */
   def tokenHashes(text: Column): Column = kcol(TokenHashesExpr(kexp(text)))
 

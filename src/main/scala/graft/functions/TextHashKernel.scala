@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** JVM kernels for the portable text-hash stack ([[TextHash]]). Each mirrors
@@ -135,6 +136,31 @@ object TextHashKernel {
     val (dup2, top2) = gramStats(th, n, 2)
     val (dup3, _) = gramStats(th, n, 3)
     new GenericArrayData(Array(dup2, dup3, top2))
+  }
+
+  /** Whitespace tokens → (term, tf) structs, one per distinct token in
+    * first-occurrence order: the same tokens as `TextHash.tokens`, counted
+    * in one pass over the row (the kernel behind `TextHash.termCounts`). */
+  def termCounts(s: UTF8String): ArrayData = {
+    val str = s.toString
+    val counts = new java.util.LinkedHashMap[String, Array[Long]]()
+    var start = -1
+    var i = 0
+    while (i <= str.length) {
+      val cp = if (i < str.length) str.codePointAt(i) else ' '
+      if (isSpace(cp)) {
+        if (start >= 0) {
+          val c = counts.computeIfAbsent(str.substring(start, i), _ => new Array[Long](1))
+          c(0) += 1
+          start = -1
+        }
+      } else if (start < 0) start = i
+      i += Character.charCount(cp)
+    }
+    val out = new Array[Any](counts.size)
+    var m = 0
+    counts.forEach { (t, c) => out(m) = InternalRow(UTF8String.fromString(t), c(0)); m += 1 }
+    new GenericArrayData(out)
   }
 
   /** Greedy left-to-right BPE merge: every non-overlapping adjacent
@@ -297,6 +323,16 @@ case class RepetitionExpr(child: Expression) extends TextKernelUnary {
   override protected def nullSafeEval(a: Any): Any =
     TextHashKernel.repetition(a.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): RepetitionExpr = copy(child = c)
+}
+
+case class TermCountsExpr(child: Expression) extends TextKernelUnary {
+  override def dataType: DataType = ArrayType(
+    new StructType().add("term", StringType, nullable = false).add("tf", LongType, nullable = false),
+    containsNull = false)
+  override protected def call: String = "termCounts($c)"
+  override protected def nullSafeEval(s: Any): Any =
+    TextHashKernel.termCounts(s.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): TermCountsExpr = copy(child = c)
 }
 
 case class ApplyMergeExpr(child: Expression, a: Long, b: Long, m: Long) extends TextKernelUnary {

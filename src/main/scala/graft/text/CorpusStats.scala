@@ -72,11 +72,14 @@ object CorpusStats {
     * double ties in both engines, so the term tie-break makes row_number
     * deterministic.
     *
-    * Plan shape: the (id, term) tf aggregate is the ONE corpus-sized
-    * shuffle (map-side combinable); df re-aggregates the tf result by term
-    * (vocabulary-sized, reuses the tf exchange) and joins back broadcast;
-    * the top-k window partitions by document — its input is already
-    * tf-aggregated, #distinct-terms-per-doc rows, not token-stream-sized.
+    * Plan shape: tf is counted inside each row ([[TextHash.termCounts]]:
+    * a document is one row, so `id` must be unique) and exploded as
+    * (id, term, tf), so the corpus never crosses a shuffle keyed on
+    * (id, term). Three shuffles remain: df (a map-side-combined count by
+    * term, vocabulary-sized, joined back broadcast), N (one row per
+    * partition) and the top-k window by document, whose map side keeps at
+    * most k rows per document and partition. The price is a second scan of
+    * the text column: the df aggregate and the scoring side each read it.
     *
     * Output: (id, term, tf, df, tfidf, rank), rank ∈ [1, k]; `tfidf` exact
     * (unrounded).
@@ -88,8 +91,8 @@ object CorpusStats {
       text: String = "text"
   ): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val toks = df.select(col(id), explode(TextHash.tokens(col(text))).as("term"))
-    val tf = toks.groupBy(col(id), col("term")).agg(count(lit(1)).as("tf"))
+    val tf = df.select(col(id), explode(TextHash.termCounts(col(text))).as("t"))
+      .select(col(id), col("t.term").as("term"), col("t.tf").as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = df.agg(count(lit(1)).as("n_docs"))
     val scored = tf

@@ -67,6 +67,21 @@ class ContextualSpec extends SparkSpec {
     ).collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
     assert(out == Seq((12.3, -45.6), (-10.0, 160.0), (5.5, 170.0)))
   }
+
+  test("S4 convertDirectionsToDegreeLatLon: N/S/E/W signs, W wrap below -180, trim and case") {
+    val df = Seq(
+      ("a", "12.3N", "190.0W"), // W: -190 < -180 wraps to 170
+      ("b", " 10.0s ", "45.6w "), // trimmed, lower-case suffixes
+      ("c", "5.5n", " 170.0e"),
+      ("d", "7.0S", "180.0W"), // -180 is not below -180: no wrap
+      ("e", "1.5N", "190.0E") // E is taken as written, no wrap
+    ).toDF("id", "la", "lo")
+    val out = Conversions.convertDirectionsToDegreeLatLon(df, "la", "lo")
+    assert(out.columns.toSeq == Seq("id", "la", "lo"))
+    val got = out.orderBy("id").collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+    assert(got.toSeq == Seq(("a", 12.3, 170.0), ("b", -10.0, -45.6), ("c", 5.5, 170.0),
+      ("d", -7.0, -180.0), ("e", 1.5, 190.0)))
+  }
 }
 
 class PipelineSpec extends SparkSpec {

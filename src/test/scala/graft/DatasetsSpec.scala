@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.sources.Datasets
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, TimestampType}
 
 /** S2 loaders: reference column mappings applied through canonical ingest
   * (rename + coerce + validate), including the ships dropna behavior. */
@@ -49,6 +49,19 @@ class DatasetsSpec extends SparkSpec {
     val (df, s) = Datasets.load(spark, "geolife", path)
     assert(df.count() == 2)
     assert(df.select(s.idCol).distinct().count() == 1)
+  }
+
+  test("loadHabitat reads the starkey_habitat table as a plain CSV: header and inferred types") {
+    val path = writeCsv("starkey_habitat.csv",
+      """id,habitat,elevation_m,canopy
+        |1,meadow,1234.5,0.25
+        |2,forest,1301.0,0.8
+        |""".stripMargin)
+    val df = Datasets.loadHabitat(spark, path)
+    assert(df.schema.map(f => f.name -> f.dataType) == Seq("id" -> IntegerType,
+      "habitat" -> StringType, "elevation_m" -> DoubleType, "canopy" -> DoubleType))
+    assert(df.orderBy("id").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1, "meadow", 1234.5, 0.25), Seq(2, "forest", 1301.0, 0.8)))
   }
 
   test("unknown dataset rejected with the known list") {

@@ -10,6 +10,7 @@ class DriverSpec extends AnyFunSuite {
       "spark.master" -> "local[3]",
       "spark.sql.shuffle.partitions" -> "12",
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304",
+      "spark.sql.codegen.cache.maxEntries" -> "4096",
       "spark.sql.windowExec.buffer.in.memory.threshold" -> "1048576",
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
       "spark.sql.session.timeZone" -> "UTC",

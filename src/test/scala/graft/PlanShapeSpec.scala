@@ -109,6 +109,27 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("tf-idf counts terms in the row: no (doc_id, term) exchange, at most 6 jobs") {
+    val sc = spark.sparkContext
+    val q = SparkEntry.select(Seq("q_txt_tfidf")).head
+    val df = q.build(spark, dir)
+    val keyed = "hashpartitioning\\(([^)]*)\\)".r.findAllMatchIn(planOf(df)).map(_.group(1))
+      .filter(k => k.contains("doc_id#") && k.contains("term#")).toList
+    assertPlan(df, s"q_txt_tfidf: exchange keyed on (doc_id, term): $keyed")(keyed.isEmpty)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      org.apache.spark.BusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assertPlan(df, s"q_txt_tfidf: ${jobs.get} jobs run, at most 6 expected")(jobs.get <= 6)
+  }
+
   test("a groupBy(entity) over the range-mode as-of still plans its exchange") {
     val banded = graft.asof.AsOfBanded.backwardBanded(probe, build, "user_id", "ts", AsOfValues,
       buildOrder = Seq("o_orderkey"))

@@ -1,7 +1,14 @@
 package graft
 
-import graft.functions.TextHash
+import graft.functions.{TermCountsExpr, TextHash}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The codegen'd text-hash kernels must agree EXACTLY with the declarative
   * HOF formulations (which the DuckDB oracles mirror) on real driver data,
@@ -45,5 +52,65 @@ class TextKernelParitySpec extends SparkSpec {
         (col("k3") <=> col("dup_3gram_frac")) &&
         (col("kt") <=> col("top_2gram_frac")))).count()
     assert(bad == 0, s"$bad rows diverge between RepetitionExpr and the HOF chain")
+  }
+
+  /** Term-count edge texts: null, empty and whitespace-only (\u000B, \f),
+    * leading/trailing/repeated whitespace, repeated terms, NBSP and EM
+    * SPACE inside a token (neither is Java's \s), non-BMP code points, and
+    * one whale doc. */
+  private val termEdges: Seq[String] = Seq(null, "", " ", "\u000B\f \t\r\n", "\f\u000B",
+    "  lead and trail  ", "a  a\t\ta b\u000Ba\fb", "x\u00A0y x\u00A0y x y\u2003z",
+    "\uD83D\uDE00 \uD83D\uDE00\uD83D\uDE01 \uD835\uDD18 \uD835\uDD18",
+    Iterator.range(0, 60000).map(i => s"w${i % 997}").mkString(" "))
+
+  private def terms(a: ArrayData): Seq[(String, Long)] =
+    (0 until a.numElements()).map { i =>
+      val r = a.getStruct(i, 2)
+      (r.getUTF8String(0).toString, r.getLong(1))
+    }
+
+  test("termCounts kernel: eval == codegen on the edge texts") {
+    val e = TermCountsExpr(BoundReference(0, StringType, nullable = true))
+    val gen = GenerateUnsafeProjection.generate(Seq(e))
+    for (t <- termEdges) {
+      val row = InternalRow(UTF8String.fromString(t))
+      val interpreted = e.eval(row)
+      val codegen = gen(row)
+      if (t == null) assert(interpreted == null && codegen.isNullAt(0))
+      else assert(terms(interpreted.asInstanceOf[ArrayData]) == terms(codegen.getArray(0)),
+        s"eval and codegen diverge on ${t.take(40)}")
+    }
+  }
+
+  test("termCounts kernel == explode(tokens) + groupBy(id, term).count, interpreted and codegen") {
+    import spark.implicits._
+    val extra = termEdges.zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text")
+    val t = spark.read.parquet(s"${sfDir("0.001")}/documents.parquet")
+      .select(col("doc_id"), col("text")).unionByName(extra)
+    // the declarative form: a corpus-sized (doc_id, term) shuffle
+    val reference = t.select(col("doc_id"), explode(TextHash.tokens(col("text"))).as("term"))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    // the parquet rows run the projection interpreted or codegen'd per mode;
+    // the edge rows are a local relation the optimizer folds with `eval`
+    // (the eval == codegen case above covers them)
+    def kernel: DataFrame = t.select(col("doc_id"), TextHash.termCounts(col("text")).as("tc"))
+      .select(col("doc_id"), explode(col("tc")).as("t"))
+      .select(col("doc_id"), col("t.term").as("term"), col("t.tf").as("tf"))
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = keys.map(k => k -> spark.conf.getAll.get(k))
+    try {
+      for (mode <- Seq(Seq("true", "CODEGEN_ONLY"), Seq("false", "NO_CODEGEN"))) {
+        keys.zip(mode).foreach { case (k, v) => spark.conf.set(k, v) }
+        val k = kernel
+        val missing = reference.exceptAll(k).count()
+        val extraRows = k.exceptAll(reference).count()
+        assert(missing == 0 && extraRows == 0,
+          s"${mode.last}: $missing reference rows missing, $extraRows extra kernel rows")
+      }
+    } finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    // the whale doc: 997 distinct terms, 60,000 tokens
+    val whale = kernel.where(col("doc_id") === -termEdges.length.toLong)
+      .agg(count(lit(1)), sum(col("tf"))).head()
+    assert(whale.getLong(0) == 997L && whale.getLong(1) == 60000L)
   }
 }

@@ -3,7 +3,7 @@
 
     python3 tools/pairs.py --parent <rev> --workload <w> --seeds a-b [--trace 0|1]
 
-Checks <rev> out as a git worktree under a temporary directory, then, for
+Exports <rev> (git archive) into a temporary directory, then, for
 each seed a..b, runs `python3 perfbench/run.py --workload <w> --seed <s>
 --seconds <n> --trace <t>` once in the parent checkout and once in the
 working tree, flipping which side runs first on every pair. The run length
@@ -14,12 +14,16 @@ ones at --trace 1), it reports each side's median and quartiles, the pairs
 the working tree won (ties count for neither side), and whether the gain
 rule holds: the working tree wins at least nine tenths of the pairs and its
 median beats the parent's by more than the parent's interquartile range.
-Which way is better comes from BENCHMARK.json. Nothing under perfbench/ is
-changed; each side builds into its own checkout's .bench_build/.
+Which way is better comes from BENCHMARK.json. For suite runs it then
+reads each run's record (its path is the line before the summary) and
+reports, per query, each side's median `ops_s` and the pairs the working
+tree won, so a suite claim shows which operation moved. Nothing under
+perfbench/ is changed; each side builds into its own checkout's .bench_build/.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -28,8 +32,19 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def op_seconds(record_line, checkout):
+    """Per query, the median of its `ops_s` over the record's passes."""
+    path = record_line.split("perfbench record ", 1)[1].strip()
+    with open(os.path.join(checkout, path)) as f:
+        record = json.load(f)
+    names = record["inputs"].get("queries", [])
+    per = zip(*(p["ops_s"] for p in record["passes"]))
+    return {name: statistics.median(xs) for name, xs in zip(names, per)}
+
+
 def run_side(checkout, workload, seed, seconds, trace):
-    """The metrics of one run.py invocation in `checkout`, or None on failure."""
+    """The metrics of one run.py invocation in `checkout` and, for suite runs,
+    its per-query seconds; None on failure."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -40,7 +55,8 @@ def run_side(checkout, workload, seed, seconds, trace):
     summary = json.loads(lines[-1])
     if not summary.get("correct"):
         print(f"  seed {seed} in {checkout}: outputs not correct", file=sys.stderr)
-    return {k: v["value"] for k, v in summary["metrics"].items()}
+    ops = op_seconds(lines[-2], checkout) if workload == "suite" else {}
+    return {k: v["value"] for k, v in summary["metrics"].items()}, ops
 
 
 def quartiles(xs):
@@ -65,9 +81,12 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="pairs_")
     parent = os.path.join(tmp, "parent")
-    subprocess.run(["git", "worktree", "add", "--detach", parent, a.parent],
-                   cwd=ROOT, check=True, capture_output=True)
+    os.makedirs(parent)
+    archive = subprocess.run(["git", "archive", a.parent], cwd=ROOT, check=True,
+                             capture_output=True).stdout
+    subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
     runs = {"parent": [], "change": []}
+    ops = {"parent": [], "change": []}
     try:
         for i, seed in enumerate(range(lo, hi + 1)):
             order = [("parent", parent), ("change", ROOT)]
@@ -79,13 +98,11 @@ def main():
                 print(f"seed {seed}: a run failed, pair dropped", file=sys.stderr)
                 continue
             for side in runs:
-                runs[side].append(got[side])
+                runs[side].append(got[side][0])
+                ops[side].append(got[side][1])
             print(f"seed {seed} ({order[0][0]} first) done", file=sys.stderr)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", parent], cwd=ROOT,
-                       capture_output=True)
-        subprocess.run(["git", "worktree", "prune"], cwd=ROOT, capture_output=True)
-        os.rmdir(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     n = len(runs["parent"])
     if not n:
@@ -104,6 +121,15 @@ def main():
         fmt = lambda q: "/".join(f"{v:.4g}" for v in q)
         print(f"{name:28} {fmt(pq):>28} {fmt(cq):>28} {wins:>3}/{n:<2}  "
               f"{'holds' if holds else 'no'}")
+    if ops["parent"] and ops["parent"][0]:
+        print(f"\nper query, median ops_s (s) over {n} pairs")
+        print(f"{'query':28} {'parent':>10} {'change':>10} {'wins':>6}")
+        for name in ops["parent"][0]:
+            p = [o[name] for o in ops["parent"]]
+            c = [o[name] for o in ops["change"]]
+            wins = sum(y < x for x, y in zip(p, c))
+            print(f"{name:28} {statistics.median(p):>10.3f} {statistics.median(c):>10.3f} "
+                  f"{wins:>3}/{n:<2}")
     return 0
 
 
